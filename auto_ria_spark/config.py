@@ -71,27 +71,6 @@ class CrawlConfig:
     # robots gating on by default (engine addition per north_rule, C5)
     respect_robots: bool = True
 
-    # intra-wave shared-stage sharing primitive: "checkpoint" cuts lineage
-    # per stage with a lazy localCheckpoint stub (shallow trees — cheap
-    # downstream analysis/plan-cache lookups); "persist" registers a SQL
-    # cache instead (no driver-side toRdd per stage, but downstream trees
-    # deepen and CacheManager sameResult scans grow — measured slower at
-    # bench scale; kept as an A/B knob).
-    stage_share_mode: str = "checkpoint"
-
-    # adaptive query execution INSIDE the wave loop.  With AQE on, the
-    # lazy per-stage checkpoint stubs are not actually lazy: toRdd on an
-    # AdaptiveSparkPlanExec materializes every shuffle/broadcast stage
-    # SYNCHRONOUSLY on the driver's plan-construction path (measured
-    # 0.3-0.8 s per stub — the bulk of the per-wave driver wall).  Off,
-    # toRdd only plans+compiles and the execution overlaps in the warm
-    # threads.  BUT off, every tiny in-wave shuffle runs at the full
-    # cfg.shuffle_partitions task count (no runtime coalescing) —
-    # measured strictly worse at bench scale (stats job 2.4 s → 26 s).
-    # Kept as a knob for mega-wave regimes where per-task data is large
-    # enough that coalescing never fires anyway; default ON.
-    aqe_in_wave: bool = True
-
     # wave pipelining (run() only): pass state between waves as in-memory
     # checkpoint stubs and commit tables asynchronously.  Wins when waves
     # are small/driver-planning-bound (many-wave crawls); for mega-wave

@@ -1,29 +1,19 @@
-"""Partitioned Bloom-filter URL-seen set.
+"""Bloom-filter kind of the sharded URL-seen set (operators/sharded_state.py).
 
-The reference's durable URL-seen set is a PostgreSQL unique index probed
-point-wise and via IN-lists (reference: app/utils/db_utils.py:20-76,
-app/core/models.py:52,68).  At a 10^10-URL frontier an exact index probe
-per candidate is the bottleneck, so the engine splits the seen set into
-``num_shards`` Bloom-filter shards keyed by ``pmod(url_hash, num_shards)``:
+Each shard's state is an ``m_bits``-bit bitset (column ``bitset``).  Build
+ORs k bit positions per new URL into its shard's bitset; probe ANDs the
+same k positions.  A negative probe is definitive (Bloom has no false
+negatives), so the URL is certainly new and skips the exact join.  A
+positive is *maybe seen*, and only those rows proceed to the exact
+``left_anti`` join against the ``seen_urls`` table.  At a ~1% FPR the
+exact join probes ~1% + true-dup% of candidates instead of 100%.  Bloom
+cannot delete; operators/cuckoo.py is the deletable kind.
 
-* **probe** — candidates are pre-screened against their shard's bitset in
-  one vectorized numpy pass per Arrow batch (``mapInPandas``).  A negative
-  is definitive (Bloom has no false negatives) → the URL is certainly new
-  and skips the exact join.  A positive is *maybe seen* → only those rows
-  proceed to the exact ``left_anti`` join against the ``seen_urls`` table.
-  At a ~1% FPR the exact join probes ~1% + true-dup% of candidates instead
-  of 100%.
-* **build** — newly admitted URLs are merged into their shard's bitset via
-  ``applyInPandas`` grouped by shard (one task per shard, each OR-ing k bit
-  positions into its own bitset).  Shard state lives in the ``seen_filters``
-  snapshot table ``(shard int, bitset binary, n_items long, updated_wave
-  int)`` so resume restores the filters together with the exact table.
-
-Sizing (config.CrawlConfig): at 10^10 URLs, 4096 shards x 2^30-bit bitsets
-(128 MiB each) with k=7 gives m/n ~ 4400/2.4M per shard... concretely
-m = 2^30, n = 10^10/4096 ~ 2.44e6 -> m/n ~ 440, FPR ~ (1-e^{-kn/m})^k
-~ 1e-15; even 2^27 bits/shard keeps FPR < 1e-4.  Tests use tiny shards;
-the arithmetic is identical.
+Sizing (config.CrawlConfig): at 10^10 URLs, 4096 shards hold
+n = 10^10/4096 ~ 2.44e6 URLs each.  With m = 2^30 bits (128 MiB) per
+shard and k=7, m/n ~ 440 and FPR ~ (1-e^{-kn/m})^k ~ 1e-15; even 2^27
+bits/shard keeps FPR < 1e-4.  Tests use tiny shards; the arithmetic is
+identical.
 
 Bit positions use double hashing h_i = h1 + i*h2 (Kirsch-Mitzenmacher)
 derived from the 64-bit url_hash via splitmix64 finalizers — no string
@@ -33,11 +23,11 @@ re-hashing executor-side.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-FILTER_SCHEMA = "shard int, bitset binary, n_items long, updated_wave int"
+from auto_ria_spark.operators import sharded_state
+
+FILTER_SCHEMA = sharded_state.STATE_SCHEMA.format("bitset")
 
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
@@ -72,37 +62,6 @@ def _test_bits(bitset: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return ((byte & bit) != 0).all(axis=1)
 
 
-def shard_of(url_hash_col, num_shards: int):
-    return F.pmod(url_hash_col, F.lit(num_shards)).cast("int")
-
-
-# session-keyed expression cache: build/probe run every wave; rebuilding
-# the same Column trees is pure py4j round-trip cost (see politeness.py).
-# WeakKeyDictionary on the session OBJECT: entries die with the session,
-# and a restarted session can never collide with a reused id() the way an
-# id-keyed dict could after garbage collection.
-from weakref import WeakKeyDictionary  # noqa: E402
-
-_EXPR_CACHE: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def _build_exprs(num_shards: int):
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    per = _EXPR_CACHE.setdefault(spark, {}) if spark is not None else {}
-    hit = per.get(num_shards)
-    if hit is None:
-        hit = (
-            [shard_of(F.col("url_hash"), num_shards).alias("shard"),
-             F.col("url_hash").cast("string").alias("url_hash_str")],
-            ["shard", F.col("bitset").alias("prior_bitset"),
-             F.col("n_items").alias("prior_n")],
-        )
-        per[num_shards] = hit
-    return hit
-
-
 def build_filters(
     new_urls: DataFrame,
     prior_filters: DataFrame | None,
@@ -112,55 +71,17 @@ def build_filters(
     k: int,
     wave: int,
 ) -> DataFrame:
-    """Merge new url_hashes into per-shard bitsets.
+    """Merge the ``url_hash`` values of ``new_urls`` into their shards'
+    bitsets; returns the full replacement ``seen_filters`` content."""
 
-    ``new_urls`` needs a ``url_hash`` column.  Returns the FULL replacement
-    ``seen_filters`` content (all shards, updated), computed with one
-    ``applyInPandas`` task per shard — the shard is the unit of parallelism,
-    exactly how a 4096-shard production build spreads over executors.
-    """
-    spark = new_urls.sparkSession
-    # url_hash rides as a string: the right-join below introduces nulls, and
-    # a nullable long surfaces in pandas as float64, which silently corrupts
-    # hashes above 2^53 (false negatives!) — strings round-trip exactly.
-    hashed_cols, prior_cols = _build_exprs(num_shards)
-    hashed = new_urls.select(*hashed_cols)
-    if prior_filters is None:
-        from auto_ria_spark.util import local_df
+    def merge(bitset: bytes, hashes: np.ndarray):
+        bits = np.frombuffer(bitset, np.uint8).copy()
+        _set_bits(bits, _bit_positions(hashes, k, m_bits))
+        return bits.tobytes(), len(hashes)
 
-        prior_filters = local_df(
-            spark,
-            [(s, bytes(m_bits // 8), 0, -1) for s in range(num_shards)],
-            FILTER_SCHEMA,
-        )
-    prior = prior_filters.select(*prior_cols)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        prior_rows = pdf["prior_bitset"].dropna()
-        if len(prior_rows):
-            bitset = np.frombuffer(prior_rows.iloc[0], np.uint8).copy()
-            n = int(pdf["prior_n"].dropna().iloc[0])
-        else:  # pragma: no cover - shards are pre-seeded above
-            bitset = np.zeros(m_bits // 8, np.uint8)
-            n = 0
-        raw = pdf["url_hash_str"].dropna()
-        hashes = np.array([int(v) for v in raw], dtype=np.int64)
-        if len(hashes):
-            _set_bits(bitset, _bit_positions(hashes, k, m_bits))
-        return pd.DataFrame(
-            {"shard": [shard], "bitset": [bitset.tobytes()],
-             "n_items": [n + len(hashes)], "updated_wave": [wave]}
-        )
-
-    # incremental: only shards that gained URLs run the pandas merge; the
-    # untouched shards pass through unchanged (at 4096 shards a wave rarely
-    # touches them all)
-    touched = hashed.select("shard").distinct()
-    joined = hashed.join(prior, "shard", "inner")
-    merged = joined.groupBy("shard").applyInPandas(merge, schema=FILTER_SCHEMA)
-    untouched = prior_filters.join(touched, "shard", "left_anti")
-    return merged.unionByName(untouched)
+    return sharded_state.mutate(
+        new_urls, prior_filters, merge, state_col="bitset",
+        state_bytes=m_bits // 8, num_shards=num_shards, wave=wave)
 
 
 def probe_filters(
@@ -174,48 +95,12 @@ def probe_filters(
     cand_schema: str | None = None,
 ) -> DataFrame:
     """Add boolean ``maybe_seen`` to candidates (needs ``url_hash``).
+    False => certainly new; True => must pass the exact anti-join."""
 
-    Shard-partitioned probe: candidates are repartitioned by their shard
-    key and **cogrouped** with the filter table, so each task materializes
-    its shard's bitset exactly once and probes all of its candidates in a
-    single vectorized pass.  (A broadcast-join-then-mapInPandas would
-    replicate the bitset into every candidate row's Arrow batch — at the
-    production sizing of 2^27-2^30 bits that is 16-128 MiB *per row* of
-    Arrow traffic, a scale-killer.)  At 10^10 scale both sides are bucketed
-    by url_hash, so this cogroup is shuffle-free on the candidate side.
+    def probe(bitset: bytes, hashes: np.ndarray) -> np.ndarray:
+        return _test_bits(np.frombuffer(bitset, np.uint8),
+                          _bit_positions(hashes, k, m_bits))
 
-    False => certainly new; True => must pass the exact anti-join.
-    """
-    if filters is None:
-        return candidates.withColumn("maybe_seen", F.lit(False))
-    with_shard = candidates.withColumn(
-        "__shard", shard_of(F.col("url_hash"), num_shards))
-    flt = filters.select("shard", "bitset")
-
-    # caller-supplied shape skips a full analysis-triggering schema access
-    if cand_schema is None:
-        cand_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in candidates.schema.fields)
-    if cand_cols is None:
-        cand_cols = [f.name for f in candidates.schema.fields]
-    out_schema = cand_schema + ", maybe_seen boolean"
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left):
-            return pd.DataFrame(columns=[*cand_cols, "maybe_seen"])
-        maybe = np.zeros(len(left), bool)
-        if len(right):
-            # the bitset is loaded ONCE per (shard, task), not per row
-            bitset = np.frombuffer(right["bitset"].iloc[0], np.uint8)
-            hashes = left["url_hash"].to_numpy(np.int64)
-            maybe = _test_bits(bitset, _bit_positions(hashes, k, m_bits))
-        out = left[cand_cols].copy()
-        out["maybe_seen"] = maybe
-        return out
-
-    return (
-        with_shard.groupBy("__shard")
-        .cogroup(flt.groupBy("shard"))
-        .applyInPandas(probe, schema=out_schema)
-    )
+    return sharded_state.probe(
+        candidates, filters, probe, state_col="bitset",
+        num_shards=num_shards, cand_cols=cand_cols, cand_schema=cand_schema)

@@ -1,11 +1,12 @@
-"""Partitioned cuckoo-filter URL-seen set — the deletable upgrade of the
-Bloom shards (operators/bloom.py).
+"""Cuckoo-filter kind of the sharded URL-seen set
+(operators/sharded_state.py) — the deletable upgrade of the Bloom kind
+(operators/bloom.py).
 
-Same sharding contract as the Bloom path (shard = pmod(url_hash,
-num_shards); one ``applyInPandas`` task per shard for mutation; broadcast
-shard-state join + vectorized numpy probe via ``mapInPandas``), plus the
-one thing Bloom cannot do: **deletion** — needed when a URL must be
-re-crawled (listing refresh, retracted car, freshness-priority re-queue).
+Each shard's state is a bucket table (column ``table``).  It shares the
+shard layout, the cogrouped build and the cogrouped probe with Bloom and
+adds the one thing Bloom cannot do: **deletion** — needed when a URL must
+be re-crawled (listing refresh, retracted car, freshness-priority
+re-queue).
 
 Standard cuckoo filter (Fan et al., CoNEXT'14 public construction):
 buckets of ``SLOTS``=4 16-bit fingerprints; item x lives in bucket
@@ -35,14 +36,12 @@ the same splitmix64 finalizers as the Bloom path — no string re-hashing.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from auto_ria_spark.operators.bloom import _splitmix64, shard_of
-from auto_ria_spark.util import local_df
+from auto_ria_spark.operators import sharded_state
+from auto_ria_spark.operators.bloom import _splitmix64
 
-CUCKOO_SCHEMA = "shard int, table binary, n_items long, updated_wave int"
+CUCKOO_SCHEMA = sharded_state.STATE_SCHEMA.format("table")
 SLOTS = 4
 MAX_KICKS = 500
 
@@ -134,87 +133,42 @@ def _delete_many(table: np.ndarray, hashes: np.ndarray, n_buckets: int) -> int:
     return removed
 
 
-def _mutate(op: str, urls: DataFrame, prior: DataFrame | None, *,
+def _mutate(step, sign: int, urls: DataFrame, prior: DataFrame | None, *,
             num_shards: int, n_buckets: int, wave: int) -> DataFrame:
     _check_n_buckets(n_buckets)
-    spark = urls.sparkSession
-    hashed = urls.select(
-        shard_of(F.col("url_hash"), num_shards).alias("shard"),
-        F.col("url_hash").cast("string").alias("url_hash_str"),
-    )
-    if prior is None:
-        prior = local_df(
-            spark,
-            [(s, bytes(n_buckets * SLOTS * 2), 0, -1)
-             for s in range(num_shards)],
-            CUCKOO_SCHEMA)
-    p = prior.select("shard", F.col("table").alias("prior_table"),
-                     F.col("n_items").alias("prior_n"))
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        table = np.frombuffer(
-            pdf["prior_table"].dropna().iloc[0], np.uint16
-        ).copy().reshape(n_buckets, SLOTS)
-        hashes = np.array([int(v) for v in pdf["url_hash_str"].dropna()],
-                          dtype=np.int64)
-        n = int(pdf["prior_n"].dropna().iloc[0])
-        if len(hashes):
-            if op == "insert":
-                n += _insert_many(table, hashes, n_buckets)
-            else:
-                n -= _delete_many(table, hashes, n_buckets)
-        return pd.DataFrame({"shard": [shard], "table": [table.tobytes()],
-                             "n_items": [n], "updated_wave": [wave]})
+    def apply(state: bytes, hashes: np.ndarray):
+        table = np.frombuffer(state, np.uint16).reshape(
+            n_buckets, SLOTS).copy()
+        dn = sign * step(table, hashes, n_buckets)
+        return table.tobytes(), dn
 
-    touched = hashed.select("shard").distinct()
-    merged = hashed.join(p, "shard", "inner").groupBy("shard").applyInPandas(
-        apply, schema=CUCKOO_SCHEMA)
-    untouched = prior.join(touched, "shard", "left_anti")
-    return merged.unionByName(untouched)
+    return sharded_state.mutate(
+        urls, prior, apply, state_col="table",
+        state_bytes=n_buckets * SLOTS * 2, num_shards=num_shards, wave=wave)
 
 
 def build_cuckoo(new_urls, prior, *, num_shards, n_buckets, wave):
-    return _mutate("insert", new_urls, prior, num_shards=num_shards,
+    return _mutate(_insert_many, 1, new_urls, prior, num_shards=num_shards,
                    n_buckets=n_buckets, wave=wave)
 
 
 def delete_cuckoo(urls, prior, *, num_shards, n_buckets, wave):
-    return _mutate("delete", urls, prior, num_shards=num_shards,
+    return _mutate(_delete_many, -1, urls, prior, num_shards=num_shards,
                    n_buckets=n_buckets, wave=wave)
 
 
 def probe_cuckoo(candidates: DataFrame, filters: DataFrame | None, *,
-                 num_shards: int, n_buckets: int) -> DataFrame:
-    """Add boolean ``maybe_seen`` (same contract as bloom.probe_filters):
-    shard-partitioned cogroup, one table materialization per task — never
-    a per-row broadcast of the shard state (see bloom.probe_filters)."""
+                 num_shards: int, n_buckets: int,
+                 cand_cols: list[str] | None = None,
+                 cand_schema: str | None = None) -> DataFrame:
+    """Add boolean ``maybe_seen`` (same contract as bloom.probe_filters)."""
     _check_n_buckets(n_buckets)
-    if filters is None:
-        return candidates.withColumn("maybe_seen", F.lit(False))
-    with_shard = candidates.withColumn(
-        "__shard", shard_of(F.col("url_hash"), num_shards))
-    flt = filters.select("shard", "table")
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in candidates.schema.fields) + ", maybe_seen boolean"
-    cand_cols = [f.name for f in candidates.schema.fields]
 
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left):
-            return pd.DataFrame(columns=[*cand_cols, "maybe_seen"])
-        maybe = np.zeros(len(left), bool)
-        if len(right):
-            table = np.frombuffer(
-                right["table"].iloc[0], np.uint16).reshape(n_buckets, SLOTS)
-            hashes = left["url_hash"].to_numpy(np.int64)
-            maybe = _contains(table, hashes, n_buckets)
-        out = left[cand_cols].copy()
-        out["maybe_seen"] = maybe
-        return out
+    def probe(state: bytes, hashes: np.ndarray) -> np.ndarray:
+        table = np.frombuffer(state, np.uint16).reshape(n_buckets, SLOTS)
+        return _contains(table, hashes, n_buckets)
 
-    return (
-        with_shard.groupBy("__shard")
-        .cogroup(flt.groupBy("shard"))
-        .applyInPandas(probe, schema=out_schema)
-    )
+    return sharded_state.probe(
+        candidates, filters, probe, state_col="table",
+        num_shards=num_shards, cand_cols=cand_cols, cand_schema=cand_schema)

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from auto_ria_spark.config import CrawlConfig
 from auto_ria_spark.functions import extract as X
 from auto_ria_spark.functions import urls as U
-from auto_ria_spark.operators import bloom
+from auto_ria_spark.operators import bloom, sharded_state
 from auto_ria_spark.operators.politeness import (robots_gate, salt_n_for,
                                                  top_b_per_host)
 from auto_ria_spark.sources.fetch import fetched_frontier
@@ -303,17 +303,13 @@ class CrawlEngine:
         # order between waves and completeness at run() exit.
         self._write_ex = None
         self._write_futs: list = []
+        # the warm-count thread of the wave in progress (see _warm)
+        self._warm_ex = None
         self._next_state: dict | None = None
         # (wave, files_new, files_reused, bytes_new, bytes_reused) per
         # sharded filter commit — flushed to the metrics table at run()
         # end (write-amplification evidence)
         self._filter_log: list[tuple] = []
-        # intra-wave shared-stage caches (see _stage_share): current
-        # wave's frames + the previous wave's (still feeding that wave's
-        # in-flight async commits); rotated/released at the per-wave
-        # drain barrier
-        self._stage_caches: list[DataFrame] = []
-        self._stage_caches_prev: list[DataFrame] = []
         # delta-log accounting: persisted log row counts (for the
         # compaction decision) + per-(wave, table) write-volume records —
         # flushed to the metrics table at run() end like _filter_log
@@ -332,50 +328,33 @@ class CrawlEngine:
             f.result()
 
     def _stage_share(self, df: DataFrame) -> DataFrame:
-        """Intra-wave shared stage result: a lazy ``persist()``
-        registration (one O(1) py4j call — NO Catalyst work on the
-        driver's critical path) plus the async warm count, which pays
-        analysis/optimization/whole-stage-codegen and materializes the
-        cache in the background thread.
+        """Intra-wave shared stage result: a lazy
+        ``localCheckpoint(eager=False)`` stub plus the async warm count.
 
-        Replaces the former per-stage ``localCheckpoint(eager=False)``
-        stubs: a lazy checkpoint still calls ``queryExecution.toRdd``,
-        which runs the FULL optimizer + physical planning + Janino
-        codegen compile synchronously on the driver — measured at
-        0.3-1.0 s per stub (tracker phases: ~50 ms Catalyst, the rest
-        codegen compile, re-done every wave because the wave/ts literals
-        make each wave's generated source a cache miss).  Six stubs per
-        wave made that the single largest per-wave driver cost.
-
-        Intra-wave frames do not need lineage TRUNCATION (the wave-end
-        state checkpoints still cut lineage once per wave); they only
-        need to compute once across their multiple consumers, which the
-        SQL cache provides via analyzed-plan substitution.  Caches are
-        released after the wave's async commits land (the rotation at
-        the per-wave drain barrier), so storage stays O(2 waves)."""
-        if self.cfg.stage_share_mode == "persist":
-            df = df.persist()
-            self._stage_caches.append(df)
-            return self._warm(df)
+        The stub truncates lineage, so each of the stage's consumers
+        re-analyzes a shallow tree instead of the whole wave, and it
+        costs no dedicated materialization job: the first action that
+        reads it (usually the warm count) materializes it once.  Building
+        the stub is not free: it calls ``queryExecution.toRdd``, which
+        plans and compiles the stage on the driver, measured at 0.3-1.0 s
+        per stub at bench scale (OPTIMIZATION_r07.md).  The warm count
+        moves the execution, though not that planning, off the driver's
+        critical path."""
         return self._warm(df.localCheckpoint(eager=False))
 
-    def _release_stage_caches(self, all_waves: bool = False) -> None:
-        """Unpersist stage caches whose consumers have all completed:
-        called right after a drain barrier, when the PREVIOUS wave's
-        async commits (the last readers of its stage frames) have
-        landed.  ``all_waves`` additionally releases the current wave's
-        frames (finalize path)."""
-        done, self._stage_caches_prev = (self._stage_caches_prev,
-                                         self._stage_caches)
-        self._stage_caches = []
-        if all_waves:
-            done = done + self._stage_caches_prev
-            self._stage_caches_prev = []
-        for df in done:
+    def _warm(self, df: DataFrame) -> DataFrame:
+        """Count ``df`` on the wave's single warm thread as soon as it is
+        defined, so JVM analysis/execution of stage N overlaps the
+        driver's py4j plan construction of stage N+1 (driver planning is
+        the measured fixed cost per wave — without overlap the executors
+        sit idle through it)."""
+        def go():
             try:
-                df.unpersist(False)
+                df.count()
             except Exception:
-                pass
+                pass  # the real consuming action surfaces any error
+        self._warm_ex.submit(go)
+        return df
 
     # ---------------------------------------------------------------- filters
     # The URL-seen filter is pluggable (cfg.seen_filter): Bloom shards are
@@ -410,7 +389,8 @@ class CrawlEngine:
             from auto_ria_spark.operators import cuckoo
             return cuckoo.probe_cuckoo(
                 candidates, filters, num_shards=cfg.num_shards,
-                n_buckets=cfg.cuckoo_buckets_per_shard)
+                n_buckets=cfg.cuckoo_buckets_per_shard,
+                cand_cols=cand_cols, cand_schema=cand_schema)
         return bloom.probe_filters(
             candidates, filters, num_shards=cfg.num_shards,
             m_bits=cfg.bloom_bits_per_shard, k=cfg.bloom_k,
@@ -549,7 +529,7 @@ class CrawlEngine:
             # per-shard commit: only shards holding deleted fingerprints
             # are rewritten; the rest of the filter files are byte-reused
             dead_shards = dead.select(
-                bloom.shard_of(F.col("url_hash"), cfg.num_shards)
+                sharded_state.shard_of(F.col("url_hash"), cfg.num_shards)
                 .alias("shard")).distinct()
             self.t["seen_filters"].write_sharded(
                 filters_next.join(F.broadcast(dead_shards), "shard",
@@ -712,18 +692,17 @@ class CrawlEngine:
         materialization job), ONE combined aggregation action materializes
         every stage and yields all wave counters, then the table commits —
         metrics included — fan out over driver threads against warm
-        caches.  Per wave: 1 stats job + the table writes, down from ~16
-        sequential jobs.  (On a real cluster the per-stage materialization
-        primitive is the Iceberg table commit itself; the local checkpoint
-        is the sandbox stand-in and is re-derivable from the committed
-        snapshots on executor loss.)
+        caches.  That is the design; the measured count is far higher: a
+        traced perfbench crawl (``--trace 1``, metric ``spark.jobs``)
+        counts 100-130 Spark jobs per wave on 4 cores, warm counts and
+        table writes included.  (On a real cluster the per-stage
+        materialization primitive is the Iceberg table commit itself; the
+        local checkpoint is the sandbox stand-in and is re-derivable from
+        the committed snapshots on executor loss.)
 
-        Each checkpointed stage is also *warmed asynchronously*: a
-        single-worker thread counts it as soon as it is defined, so JVM
-        analysis/execution of stage N overlaps the driver's py4j plan
-        construction of stage N+1 (driver planning is the measured
-        fixed cost per wave — without overlap the executors sit idle
-        through it).
+        Each checkpointed stage is also *warmed asynchronously* on a
+        single-worker thread (:meth:`_warm`) that lives for this call
+        only: it is shut down on every exit, including a raising stage.
 
         Contract for standalone callers (tests / custom drivers): the
         per-wave filter and frontier/pending write-volume accounting
@@ -733,24 +712,23 @@ class CrawlEngine:
         yourself ⟹ call ``finalize()`` when done, or the O(delta)
         write-volume evidence for those waves is never durably recorded
         (and the in-memory logs grow unboundedly)."""
+        from concurrent.futures import ThreadPoolExecutor
+        self._warm_ex = ThreadPoolExecutor(max_workers=1)
+        try:
+            return self._run_wave(wave, state, defer_commits)
+        finally:
+            # queued warm counts still finish, then the worker exits
+            self._warm_ex.shutdown(wait=False)
+            self._warm_ex = None
+
+    def _run_wave(self, wave: int, state: dict | None,
+                  defer_commits: bool) -> WaveStats:
         import time as _time
         from concurrent.futures import ThreadPoolExecutor
         cfg, spark = self.cfg, self.spark
         ts = cfg.wave_ts(wave)
         st = WaveStats(wave=wave)
         _t = {"start": _time.time()}
-        warm_ex = ThreadPoolExecutor(max_workers=1)
-
-        def _warm(df):
-            def go():
-                try:
-                    df.count()
-                except Exception:
-                    pass  # the real consuming action surfaces any error
-            warm_ex.submit(go)
-            return df
-
-        self._warm = _warm
 
         def _mark(name):
             now = _time.time()
@@ -944,30 +922,35 @@ class CrawlEngine:
             return self._verify_images(saved_rows, wave)
 
         pex = ThreadPoolExecutor(max_workers=5)
-        futs = [pex.submit(b) for b in
-                (b_frontier, b_seen, b_pending, b_host_saved, b_imgs)]
-        # branch-independent stats/metrics plans build HERE, overlapping
-        # the branches' py4j/JVM work (their GIL-released socket waits)
-        wave_lit = F.lit(wave).alias("wave")
-        f_agg = fetched.groupBy().agg(*E["f_agg"])
-        c_agg = flagged.groupBy().agg(*E["c_agg"])
-        p_agg = parsed.groupBy().agg(*E["p_agg"])
-        per_part = fetched.groupBy("__pid", "kind").agg(*E["per_part_agg"])
-        metric_rows = per_part.select(
-            wave_lit, F.col("__pid").alias("partition_id"),
-            "kind", F.lit("fetched").alias("metric"),
-            F.col("fetched").cast("long").alias("value"),
-        ).unionByName(per_part.select(
-            wave_lit, F.col("__pid").alias("partition_id"),
-            "kind", F.lit("fetch_ok").alias("metric"),
-            F.col("ok").cast("long").alias("value")))
-        s_agg = saved_rows.groupBy().agg(*E["s_agg"])
-        frontier_next = futs[0].result()
-        seen_add, filters_next, seen_next_u = futs[1].result()
-        pending_next = futs[2].result()
-        host_state_next, saved_hash_rows, savedh_next_u = futs[3].result()
-        imgs_next = futs[4].result()
-        pex.shutdown(wait=False)
+        try:
+            futs = [pex.submit(b) for b in
+                    (b_frontier, b_seen, b_pending, b_host_saved, b_imgs)]
+            # branch-independent stats/metrics plans build HERE,
+            # overlapping the branches' py4j/JVM work (their GIL-released
+            # socket waits)
+            wave_lit = F.lit(wave).alias("wave")
+            f_agg = fetched.groupBy().agg(*E["f_agg"])
+            c_agg = flagged.groupBy().agg(*E["c_agg"])
+            p_agg = parsed.groupBy().agg(*E["p_agg"])
+            per_part = fetched.groupBy("__pid", "kind").agg(
+                *E["per_part_agg"])
+            metric_rows = per_part.select(
+                wave_lit, F.col("__pid").alias("partition_id"),
+                "kind", F.lit("fetched").alias("metric"),
+                F.col("fetched").cast("long").alias("value"),
+            ).unionByName(per_part.select(
+                wave_lit, F.col("__pid").alias("partition_id"),
+                "kind", F.lit("fetch_ok").alias("metric"),
+                F.col("ok").cast("long").alias("value")))
+            s_agg = saved_rows.groupBy().agg(*E["s_agg"])
+            frontier_next = futs[0].result()
+            seen_add, filters_next, seen_next_u = futs[1].result()
+            pending_next = futs[2].result()
+            host_state_next, saved_hash_rows, savedh_next_u = \
+                futs[3].result()
+            imgs_next = futs[4].result()
+        finally:
+            pex.shutdown(wait=False)
         # O(delta) frontier/pending persistence: the pass-through state
         # keeps the full RESOLVED frames, but the durable commit appends
         # only this wave's additions + tombstones (see the delta-log notes
@@ -1018,8 +1001,8 @@ class CrawlEngine:
         # shards the old all-shard overwrite was 64-512 GiB of write
         # amplification per wave)
         touched_shards = seen_add.select(
-            bloom.shard_of(F.col("url_hash"), cfg.num_shards).alias("shard")
-        ).distinct()
+            sharded_state.shard_of(F.col("url_hash"), cfg.num_shards)
+            .alias("shard")).distinct()
         filters_touched = filters_next.join(
             F.broadcast(touched_shards), "shard", "left_semi")
         write_queue.append(("filters", "seen_filters", filters_touched,
@@ -1136,9 +1119,6 @@ class CrawlEngine:
         # only compacts a little early.  bound == 0 ⟺ empty delta (drain
         # wave) ⟹ tag-only commit.
         self._drain_writes()
-        # the drained (previous) wave's async commits were the last
-        # consumers of its shared-stage caches — release them now
-        self._release_stage_caches()
         for name, table, delta, full, bound, live, cols in (
                 ("frontier", "frontier", frontier_delta, frontier_next,
                  (row["sa_n"] or 0) + st.requeued + st.selected,
@@ -1233,7 +1213,6 @@ class CrawlEngine:
             # standalone callers read the tables right after the wave
             self._drain_writes()
         _mark("w_tables")
-        warm_ex.shutdown(wait=False)
         _t.pop("_last", None); _t.pop("start", None)
         st.detail = _t
         return st
@@ -1682,10 +1661,6 @@ class CrawlEngine:
         wave = first
         state = None
         pipeline = self.cfg.pipeline_waves
-        conf = self.spark.conf
-        aqe_before = conf.get("spark.sql.adaptive.enabled", "true")
-        if not self.cfg.aqe_in_wave:
-            conf.set("spark.sql.adaptive.enabled", "false")
         try:
             while wave < first + max_waves:
                 st = self.run_wave(wave, state=state,
@@ -1698,10 +1673,7 @@ class CrawlEngine:
                     break
                 wave += 1
         finally:
-            try:
-                self.finalize()
-            finally:
-                conf.set("spark.sql.adaptive.enabled", aqe_before)
+            self.finalize()
         return stats
 
     def finalize(self) -> None:
@@ -1713,11 +1685,12 @@ class CrawlEngine:
         next run), and (c) persists the accumulated per-wave filter and
         frontier/pending write-volume evidence to the metrics table.
         Idempotent: a second call with nothing accumulated is a no-op."""
-        self._drain_writes()
-        self._release_stage_caches(all_waves=True)
-        if self._write_ex is not None:
-            self._write_ex.shutdown(wait=True)
-            self._write_ex = None
+        try:
+            self._drain_writes()
+        finally:
+            if self._write_ex is not None:
+                self._write_ex.shutdown(wait=True)
+                self._write_ex = None
         self._flush_filter_metrics()
         self._flush_state_metrics()
 

@@ -385,3 +385,38 @@ def test_crawl_with_corpus_image_verification(spark, tmp_path):
     assert all(r.image_ok for r in imgs), [r for r in imgs if not r.image_ok][:3]
     oracle = crawl_oracle(world, worldgen.seed_rows(1), _cfg())
     assert saved == len(oracle.cars)
+
+
+def test_wave_failure_leaks_no_threads_and_resumes(spark, tmp_path,
+                                                   monkeypatch):
+    """A stage that raises mid-wave: ``run()`` raises, every thread pool
+    the wave started is shut down (its threads exit), and a fresh engine
+    resumes from the committed tables to the golden result."""
+    import threading
+
+    cfg = _cfg(host_budget=10, phone_budget=10)
+    world = worldgen.build_world_local(1, 60, 20)
+    seeds = worldgen.seed_rows(1)
+    pages = worldgen.pages_local_df(spark, world)
+    before = set(threading.enumerate())
+    verify = CrawlEngine._verify_images
+
+    def failing_verify(self, saved_rows, wave):
+        if wave == 1:
+            raise RuntimeError("injected stage failure")
+        return verify(self, saved_rows, wave)
+
+    monkeypatch.setattr(CrawlEngine, "_verify_images", failing_verify)
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), cfg, pages=pages)
+    with pytest.raises(RuntimeError, match="injected stage failure"):
+        eng.run(seeds=seeds, max_waves=400)
+    started = [t for t in threading.enumerate()
+               if t not in before and t.name.startswith("ThreadPoolExecutor")]
+    for t in started:
+        t.join(timeout=60)  # queued warm counts may still be finishing
+    assert not [t.name for t in started if t.is_alive()]
+
+    monkeypatch.undo()
+    resumed = CrawlEngine(spark, str(tmp_path / "wh"), cfg, pages=pages)
+    resumed.run(seeds=None, max_waves=400)
+    assert_match(resumed, crawl_oracle(world, seeds, cfg))

@@ -1,4 +1,5 @@
-"""Unit tests: Bloom seen-set shards, politeness top-B, robots gate."""
+"""Unit tests: Bloom and cuckoo seen-set shards, politeness top-B, robots
+gate."""
 
 from __future__ import annotations
 import pytest
@@ -174,6 +175,40 @@ def test_cuckoo_insert_probe_delete(spark):
     kept = _urls_df(spark, 1000, 2000)
     still = cuckoo.probe_cuckoo(kept, flt2, num_shards=SHARDS, n_buckets=NB)
     assert still.filter(~F.col("maybe_seen")).count() == 0
+
+
+@pytest.mark.soak
+def test_cuckoo_production_sized_shards(spark):
+    """Scale check for the cuckoo kind: 2^20 buckets (8 MiB per shard)
+    must take a large insert batch, probe and delete it without copying
+    the table once per inserted row."""
+    from auto_ria_spark.operators import cuckoo
+
+    NB = 1 << 20
+    inserted = _urls_df(spark, 0, 20_000)
+    flt = cuckoo.build_cuckoo(inserted, None, num_shards=SHARDS,
+                              n_buckets=NB, wave=0).cache()
+    assert flt.count() == SHARDS
+    assert flt.agg(F.sum("n_items")).first()[0] == 20_000
+    probed = cuckoo.probe_cuckoo(inserted, flt, num_shards=SHARDS,
+                                 n_buckets=NB)
+    assert probed.filter(~F.col("maybe_seen")).count() == 0
+    fresh = _urls_df(spark, 1_000_000, 1_004_000)
+    fpr = cuckoo.probe_cuckoo(fresh, flt, num_shards=SHARDS, n_buckets=NB) \
+        .filter(F.col("maybe_seen")).count() / 4000
+    assert fpr < 0.001, fpr
+
+    to_del = _urls_df(spark, 0, 5_000)
+    flt2 = cuckoo.delete_cuckoo(to_del, flt, num_shards=SHARDS,
+                                n_buckets=NB, wave=1).cache()
+    assert flt2.agg(F.sum("n_items")).first()[0] == 15_000
+    gone = cuckoo.probe_cuckoo(to_del, flt2, num_shards=SHARDS, n_buckets=NB)
+    assert gone.filter(F.col("maybe_seen")).count() < 5  # residual FPR only
+    kept = _urls_df(spark, 5_000, 20_000)
+    still = cuckoo.probe_cuckoo(kept, flt2, num_shards=SHARDS, n_buckets=NB)
+    assert still.filter(~F.col("maybe_seen")).count() == 0
+    flt2.unpersist()
+    flt.unpersist()
 
 
 def test_salt_n_for_sizing():

@@ -215,8 +215,7 @@ def main() -> None:
                          "its throughputs ride along in the summary")
     ap.add_argument("--emit", default="",
                     help="also write the summary JSON to this path "
-                         "(e.g. SCALING_r5.json — bench.py embeds the "
-                         "newest SCALING_r*.json in its artifact)")
+                         "(e.g. SCALING_r5.json)")
     args = ap.parse_args()
     cars_per_host = args.cars_total // args.hosts
 
