@@ -10,7 +10,7 @@ at app/scraper/autoria.py:139; we pass the timestamp in).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -63,13 +63,8 @@ class CrawlConfig:
     # rows salted across `ceil(count / salt_target)` sub-partitions before
     # the fetch stage (C6).
     salt_target: int = 1024
-    # Arrow batch bound for multi-MB image payload columns (SURVEY §4).
-    arrow_max_records: int = 128
     # shuffle partitioning for crawl-state joins (bucket-by url_hash).
     shuffle_partitions: int = 32
-
-    # robots gating on by default (engine addition per north_rule, C5)
-    respect_robots: bool = True
 
     # wave pipelining (run() only): pass state between waves as in-memory
     # checkpoint stubs and commit tables asynchronously.  Wins when waves
@@ -112,8 +107,6 @@ class CrawlConfig:
     # policy only DELAYS rows — the discovered set, discovery ranks and
     # final saved rows are identical in every mode.
     order_mode: str = "crawl"
-
-    extra: dict = field(default_factory=dict)
 
     def wave_ts(self, wave: int) -> int:
         """Deterministic epoch-seconds timestamp for wave *w*."""

@@ -28,9 +28,17 @@ autoria.py:248-348, parsers/car_page.py:302-373):
 429/503 rows re-queue with (attempt+1, not_before = wave_ts +
 deterministic backoff) mirroring the reference's retry structure
 (search_page.py:153-178, car_page.py:276-292) without wall clocks.
-Every state table commits a snapshot tagged with the wave — the
-checkpoint the north rule requires; resume = roll all tables back to the
-last wave committed by every table and continue.
+
+The crawl state is nine snapshot tables, each declared once in
+``sources/warehouse.STATE_TABLES`` (schema + production bucketing); the
+column lists, delta-log schemas and DDL here derive from it, and every
+frontier row is built by one projection, :func:`frontier_row`.  A wave
+reads the six pass-through tables (or takes them in memory from the
+previous wave), plans one write per table, and commits in one loop over
+the table names: each table gets a write or, when the wave added
+nothing to it, a tag-only retag.  Every commit is tagged with the wave —
+the checkpoint the north rule requires; resume = roll all tables back to
+the last wave committed by every table and continue.
 
 Crawl-order reproducibility: the total order key is (host, kind_rank,
 page_index, pos_on_page / discovery_rank); budgets only *delay* rows,
@@ -49,9 +57,10 @@ row data never collects to the driver.
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from auto_ria_spark.config import CrawlConfig
@@ -60,51 +69,32 @@ from auto_ria_spark.functions import urls as U
 from auto_ria_spark.operators import bloom, sharded_state
 from auto_ria_spark.operators.politeness import (robots_gate, salt_n_for,
                                                  top_b_per_host)
-from auto_ria_spark.sources.fetch import fetched_frontier
-from auto_ria_spark.sources.warehouse import Warehouse
+from auto_ria_spark.sources.fetch import (FETCH_RESULT_EXTRA,
+                                          fetched_frontier, page_store_side)
+from auto_ria_spark.sources.warehouse import (STATE_TABLES, Warehouse,
+                                              schema_fields, stored_schema)
 from auto_ria_spark.util import empty_df, local_df
 
-FRONTIER_COLS = ["url_norm", "url_hash", "host", "kind", "kind_rank",
-                 "page_index", "pos_on_page", "attempt", "not_before",
-                 "discovery_rank", "discovered_wave",
-                 "priority_price", "priority_freshness"]
-FRONTIER_SCHEMA = (
-    "url_norm string, url_hash long, host string, kind string, kind_rank int,"
-    " page_index int, pos_on_page int, attempt int, not_before long,"
-    " discovery_rank long, discovered_wave int,"
-    " priority_price int, priority_freshness long"
-)
-SEEN_SCHEMA = (
-    "url_hash long, url_norm string, host string, kind string,"
-    " discovery_rank long, discovered_wave int"
-)
-PENDING_SCHEMA = (
-    "phone_hash long, url string, host string, discovery_rank long,"
-    " title string, price_usd int, odometer int, username string,"
-    " image_url string, image_id string, images_count int,"
-    " car_number string, car_vin string"
-)
-CARS_SCHEMA = (
-    "url string, title string, price_usd int, odometer int, username string,"
-    " phone_number string, image_url string, image_id string,"
-    " images_count int, car_number string, car_vin string,"
-    " datetime_found timestamp, host string, discovery_rank long"
-)
-METRICS_SCHEMA = (
-    "wave int, partition_id int, kind string, metric string, value long"
-)
-HOSTSTATE_SCHEMA = "host string, cars_discovered long, pagination_done boolean"
-# F2 incremental saved-set: hashes of every url in `cars`, appended per wave
-# (never a per-wave rescan of the cars table); rebuilt from `cars` on resume
-SAVED_HASHES_SCHEMA = "url_hash long"
-CAR_IMAGES_SCHEMA = (
-    "image_id string, url string, w int, h int, decoded_w int, decoded_h int,"
-    " phash long, decoded_phash long, image_ok boolean, caption string,"
-    " verified_wave int"
-)
+# the state tables' schemas (declared in sources/warehouse.STATE_TABLES)
+# under the names the rest of the package imports
+FRONTIER_SCHEMA = STATE_TABLES["frontier"][0]
+SEEN_SCHEMA = STATE_TABLES["seen_urls"][0]
+PENDING_SCHEMA = STATE_TABLES["pending_cars"][0]
+CARS_SCHEMA = STATE_TABLES["cars"][0]
+CAR_IMAGES_SCHEMA = STATE_TABLES["car_images"][0]
+SAVED_HASHES_SCHEMA = STATE_TABLES["saved_hashes"][0]
+HOSTSTATE_SCHEMA = STATE_TABLES["host_state"][0]
+METRICS_SCHEMA = STATE_TABLES["metrics"][0]
+FRONTIER_FIELDS = schema_fields(FRONTIER_SCHEMA)
+FRONTIER_COLS = [name for name, _ in FRONTIER_FIELDS]
+SEEN_COLS = [name for name, _ in schema_fields(SEEN_SCHEMA)]
+PENDING_COLS = [name for name, _ in schema_fields(PENDING_SCHEMA)]
+FETCHED_COLS = FRONTIER_COLS + [
+    name for name, _ in schema_fields(FETCH_RESULT_EXTRA)]
 
-TABLES = ("frontier", "seen_urls", "seen_filters", "pending_cars", "cars",
-          "car_images", "metrics", "host_state")
+# the checkpoint-consistency cut: every table but the DERIVED saved_hashes
+# (rebuilt from cars on resume)
+TABLES = tuple(name for name in STATE_TABLES if name != "saved_hashes")
 
 # --- delta-log persistence (frontier / pending_cars) -----------------------
 # Per wave the durable commit APPENDS only the wave's delta instead of
@@ -120,9 +110,11 @@ TABLES = ("frontier", "seen_urls", "seen_filters", "pending_cars", "cars",
 # Iceberg v2 merge-on-read: the tombstone set is an equality-delete file on
 # the key, ``__fwave`` is the sequence number, and compaction is
 # rewrite_data_files; the explicit columns keep the model portable.
-FRONTIER_LOG_SCHEMA = FRONTIER_SCHEMA + ", __op string, __fwave int"
-PENDING_LOG_SCHEMA = PENDING_SCHEMA + ", __op string, __fwave int"
-PENDING_COLS = [f.strip().split(" ", 1)[0] for f in PENDING_SCHEMA.split(",")]
+FRONTIER_LOG_SCHEMA = stored_schema("frontier")
+PENDING_LOG_SCHEMA = stored_schema("pending_cars")
+# delta-log table -> (log key, live columns, metrics-table kind)
+_LOGS = {"frontier": ("url_hash", FRONTIER_COLS, "frontier"),
+         "pending_cars": ("phone_hash", PENDING_COLS, "pending")}
 
 
 def log_adds(df: DataFrame, wave: int, cols: list[str]) -> DataFrame:
@@ -133,24 +125,35 @@ def log_adds(df: DataFrame, wave: int, cols: list[str]) -> DataFrame:
                          f"cast({wave} as int) as __fwave")
 
 
-_LOG_DEL_EXPRS: dict[tuple, list[str]] = {}
-
-
 def log_dels(keys: DataFrame, wave: int, schema: str, key: str) -> DataFrame:
     """Tombstone rows: the key column + nulls for the rest of the schema
-    (parquet nulls — a tombstone costs bytes only for the key).  The
-    expression strings are schema-constant and cached; the whole
-    projection is ONE selectExpr (py4j round trips off the wave path)."""
-    exprs = _LOG_DEL_EXPRS.get((schema, key))
-    if exprs is None:
-        exprs = []
-        for part in schema.split(","):
-            name, typ = part.strip().split(" ", 1)
-            exprs.append(f"{key} as {name}" if name == key
-                         else f"cast(null as {typ}) as {name}")
-        _LOG_DEL_EXPRS[(schema, key)] = exprs
-    return keys.selectExpr(*exprs, "'d' as __op",
-                           f"cast({wave} as int) as __fwave")
+    (parquet nulls — a tombstone costs bytes only for the key), as ONE
+    selectExpr (py4j round trips off the wave path)."""
+    return keys.selectExpr(
+        *(f"{key} as {name}" if name == key
+          else f"cast(null as {typ}) as {name}"
+          for name, typ in schema_fields(schema)),
+        "'d' as __op", f"cast({wave} as int) as __fwave")
+
+
+def frontier_row(*keep: str, **given) -> list:
+    """The frontier-row projection: ``FRONTIER_COLS`` in schema order.
+    Columns named in ``keep`` pass through from the input and a ``given``
+    column (a Column or a Python literal) is used as given — both must
+    already have the schema's type.  Every other column takes its
+    default: url_hash and host derive from url_norm, kind_rank from kind;
+    page_index, pos_on_page, attempt and not_before are 0, the rest a
+    typed null."""
+    cols = {name: c if isinstance(c, Column) else F.lit(c)
+            for name, c in given.items()}
+    url_norm = cols.get("url_norm", F.col("url_norm"))
+    cols = {"url_hash": U.url_hash64(url_norm), "host": U.url_host(url_norm),
+            "kind_rank": U.kind_rank(cols.get("kind", F.col("kind"))),
+            **cols}
+    zero = ("page_index", "pos_on_page", "attempt", "not_before")
+    return [name if name in keep else cols.get(
+                name, F.lit(0 if name in zero else None).cast(typ)).alias(name)
+            for name, typ in FRONTIER_FIELDS]
 
 
 def resolve_log(raw: DataFrame, key: str, cols: list[str]) -> DataFrame:
@@ -170,10 +173,8 @@ def resolve_log(raw: DataFrame, key: str, cols: list[str]) -> DataFrame:
             .select(*cols))
 
 
-_VERIFY_SCHEMA = (
-    "image_id string, url string, w int, h int, decoded_w int, decoded_h int,"
-    " phash long, decoded_phash long, image_ok boolean, caption string"
-)
+# stage V's output: a car_images row before its verified_wave stamp
+_VERIFY_SCHEMA = CAR_IMAGES_SCHEMA.rsplit(",", 1)[0]
 
 
 def _verify_pixels(batches):
@@ -185,8 +186,7 @@ def _verify_pixels(batches):
 
     from auto_ria_spark.functions import imaging
 
-    cols = ["image_id", "url", "w", "h", "decoded_w", "decoded_h",
-            "phash", "decoded_phash", "image_ok", "caption"]
+    cols = [name for name, _ in schema_fields(_VERIFY_SCHEMA)]
     for pdf in batches:
         out = []
         for iid, url, data, w, h, phash, caption in zip(
@@ -229,7 +229,6 @@ def _strip_stats(df: DataFrame) -> DataFrame:
         # breaks it, say so LOUDLY — silently returning df re-opens the
         # geometric plan-stats blowup this function exists to stop (the
         # pipelined-wave regression test asserts stub stats stay flat)
-        import warnings
         warnings.warn(
             "_strip_stats fell back to the unstripped frame (private "
             "Spark API unavailable?) — pipelined waves may hit the "
@@ -292,10 +291,7 @@ class CrawlEngine:
         # the image+caption corpus (input_hint): stage V validates each
         # saved car's photo bytes against it (decode + phash + dims)
         self.corpus = corpus
-        # saved_hashes is DERIVED state (from cars) — excluded from the
-        # checkpoint-consistency cut (TABLES) and rebuilt on resume instead
-        self.t = {name: self.wh.table(name)
-                  for name in (*TABLES, "saved_hashes")}
+        self.t = {name: self.wh.table(name) for name in STATE_TABLES}
         # async commit machinery: inside run() the table writes are pure
         # DURABILITY (the next wave consumes in-memory pass-through state),
         # so they fan out on this executor and overlap the next wave's
@@ -307,12 +303,12 @@ class CrawlEngine:
         self._warm_ex = None
         self._next_state: dict | None = None
         # (wave, files_new, files_reused, bytes_new, bytes_reused) per
-        # sharded filter commit — flushed to the metrics table at run()
-        # end (write-amplification evidence)
+        # sharded filter commit — flushed to the metrics table by
+        # finalize() (write-amplification evidence)
         self._filter_log: list[tuple] = []
-        # delta-log accounting: persisted log row counts (for the
-        # compaction decision) + per-(wave, table) write-volume records —
-        # flushed to the metrics table at run() end like _filter_log
+        # delta-log accounting: persisted log row counts per table (for
+        # the compaction decision) + per-(wave, table) write-volume records
+        # — flushed to the metrics table by finalize() like _filter_log
         self._log_rows: dict[str, int] | None = None
         self._state_meta: dict[tuple, dict] = {}
         # hottest-host pending upper bound (drives adaptive top-B salt
@@ -347,12 +343,14 @@ class CrawlEngine:
         defined, so JVM analysis/execution of stage N overlaps the
         driver's py4j plan construction of stage N+1 (driver planning is
         the measured fixed cost per wave — without overlap the executors
-        sit idle through it)."""
+        sit idle through it).  A failed warm count only warns: the real
+        consuming action re-raises the error."""
         def go():
             try:
                 df.count()
-            except Exception:
-                pass  # the real consuming action surfaces any error
+            except Exception as e:
+                warnings.warn(f"warm count failed: {type(e).__name__}: {e}",
+                              RuntimeWarning)
         self._warm_ex.submit(go)
         return df
 
@@ -397,30 +395,41 @@ class CrawlEngine:
             cand_cols=cand_cols, cand_schema=cand_schema)
 
     # ------------------------------------------------------------------ state
-    def _read(self, name: str, schema: str) -> DataFrame:
+    def _read(self, name: str, schema: str | None = None) -> DataFrame:
+        """The current rows of table ``name`` (empty if none); a delta log
+        resolves to its live rows (merge-on-read)."""
+        schema = schema or stored_schema(name)
         df = self.t[name].read(self.spark, schema=schema)
-        if df is None:
-            return empty_df(self.spark, schema)
+        df = empty_df(self.spark, schema) if df is None else df
+        if name in _LOGS:
+            key, cols, _ = _LOGS[name]
+            df = resolve_log(df, key, cols)
         return df
 
     def _frontier_read(self) -> DataFrame:
-        """Resolved frontier view over the delta log (merge-on-read)."""
-        return resolve_log(self._read("frontier", FRONTIER_LOG_SCHEMA),
-                           "url_hash", FRONTIER_COLS)
+        return self._read("frontier")
 
     def _pending_read(self) -> DataFrame:
-        """Resolved pending_cars view over the delta log."""
-        return resolve_log(self._read("pending_cars", PENDING_LOG_SCHEMA),
-                           "phone_hash", PENDING_COLS)
+        return self._read("pending_cars")
+
+    def _read_state(self) -> dict:
+        """The tables a wave passes on to the next, read back from their
+        current snapshots."""
+        state = {name: self._read(name) for name in (
+            "frontier", "seen_urls", "pending_cars", "saved_hashes",
+            "host_state")}
+        # None before the first commit: the builds then start from empty
+        # shards
+        state["seen_filters"] = self.t["seen_filters"].read(
+            self.spark, schema=self._filter_schema())
+        return state
 
     def _init_log_rows(self) -> None:
         """Size the persisted delta logs once per run (parquet footers —
         no Spark job); per-wave commits then maintain the counters."""
         if self._log_rows is None:
-            self._log_rows = {
-                "frontier": self.t["frontier"].total_rows(self.spark),
-                "pending": self.t["pending_cars"].total_rows(self.spark),
-            }
+            self._log_rows = {name: self.t[name].total_rows(self.spark)
+                              for name in _LOGS}
 
     def last_complete_wave(self) -> int:
         """Highest wave tagged on ALL state tables (checkpoint marker)."""
@@ -430,23 +439,28 @@ class CrawlEngine:
             waves.append(max(tags) if tags else -1)
         return min(waves) if waves else -1
 
-    def resume(self) -> int:
-        """Roll every table back to the last wave all tables committed.
-
-        Crash recovery: a wave's commits are per-table, so a crash
-        mid-commit leaves some tables one wave ahead; rollback restores a
-        consistent cut (the Iceberg-snapshot analogue of 'restart from
-        last checkpoint').  Returns the next wave to run.
-        """
+    def _rollback(self) -> int:
+        """Roll every table back to the last wave all tables committed and
+        return that wave.  A wave's commits are per-table, so a crash
+        mid-commit leaves some tables one wave ahead; the rollback
+        restores a consistent cut."""
         w = self.last_complete_wave()
         for name in TABLES:
             self.t[name].rollback_to_tag("wave", w)
-        self._log_rows = None  # rollback moved the log: re-size on read
+        self._log_rows = None  # rollback moved the logs: re-size on read
         self._hostmax = None   # stale bound: re-derive from the log size
+        return w
+
+    def resume(self) -> int:
+        """Roll every table back to the last wave all tables committed
+        (the Iceberg-snapshot analogue of 'restart from last
+        checkpoint').  Returns the next wave to run.
+        """
+        w = self._rollback()
         # rebuild the derived F2 saved-set from the rolled-back cars table
         # (one job per resume — waves then append incrementally, never
         # rescanning cars)
-        cars = self._read("cars", CARS_SCHEMA)
+        cars = self._read("cars")
         self.t["saved_hashes"].write(
             cars.select(U.url_hash64(F.col("url")).alias("url_hash"))
             .distinct(),
@@ -481,16 +495,12 @@ class CrawlEngine:
         bit-identical to the original crawl's.
         """
         cfg, spark = self.cfg, self.spark
-        w = self.last_complete_wave()
         # build on the CONSISTENT cut, not on whatever current() holds: a
         # crash can leave some tables one wave ahead (torn commit), and
         # the append-mode frontier commit below would otherwise carry the
         # torn wave's delta files into a wave-w-tagged snapshot that a
         # later resume() rollback could no longer shed
-        for name in TABLES:
-            self.t[name].rollback_to_tag("wave", w)
-        self._log_rows = None  # rollback moved the log: re-size on read
-        self._hostmax = None   # requeue grows pending: re-bound from log
+        w = self._rollback()
         tag = {"wave": w}
         nf = max(2, cfg.shuffle_partitions // 8)
         url_df = (urls if isinstance(urls, DataFrame)
@@ -507,7 +517,7 @@ class CrawlEngine:
             .withColumn("url_hash", U.url_hash64(F.col("url_norm")))
             .localCheckpoint()
         )
-        seen = self._read("seen_urls", SEEN_SCHEMA)
+        seen = self._read("seen_urls")
         stale_seen = seen.join(
             F.broadcast(stale.select("url_hash")), "url_hash", "left_semi")
         dead = (
@@ -541,7 +551,7 @@ class CrawlEngine:
             filters_next = self._build_filters(seen_next, None, wave=w)
             self.t["seen_filters"].write_sharded(filters_next, "overwrite",
                                                  tag)
-        cars = self._read("cars", CARS_SCHEMA)
+        cars = self._read("cars")
         cars_next = cars.join(
             F.broadcast(stale.select(F.col("url_norm").alias("url"))),
             "url", "left_anti")
@@ -550,15 +560,8 @@ class CrawlEngine:
             cars_next.select(U.url_hash64(F.col("url")).alias("url_hash"))
             .distinct(), "overwrite", tag, 1)
         requeue = stale_seen.filter(F.col("kind") != "phone").select(
-            "url_norm", "url_hash", "host", "kind",
-            U.kind_rank(F.col("kind")).alias("kind_rank"),
-            F.lit(0).alias("page_index"), F.lit(0).alias("pos_on_page"),
-            F.lit(0).alias("attempt"),
-            F.lit(0).cast("long").alias("not_before"),
-            "discovery_rank", "discovered_wave",
-            F.lit(None).cast("int").alias("priority_price"),
-            F.lit(None).cast("long").alias("priority_freshness"),
-        ).select(*FRONTIER_COLS)
+            *frontier_row("url_norm", "url_hash", "host", "kind",
+                          "discovery_rank", "discovered_wave"))
         # O(delta) commit: append the requeue rows as wave-w additions to
         # the frontier delta log — NOT a compaction.  A consumed URL's
         # tombstone carries the wave it was fetched (≤ w), and resolve_log
@@ -581,53 +584,17 @@ class CrawlEngine:
     def start(self, seeds: list[dict]) -> None:
         """Seed the frontier (mirrors the SCRAPER_START_URL bootstrap,
         reference: app/config/settings.py:76-79)."""
-        cfg = self.cfg
         seed_df = local_df(
             self.spark,
             [(s["url"], s.get("kind", "listing")) for s in seeds],
             "url string, kind string",
         )
-        fr = (
-            seed_df.select(
-                U.canonicalize_url(F.col("url")).alias("url_norm"),
-                F.col("kind"),
-            )
-            .withColumn("url_hash", U.url_hash64(F.col("url_norm")))
-            .withColumn("host", U.url_host(F.col("url_norm")))
-            .withColumn("kind_rank", U.kind_rank(F.col("kind")))
-            # pages-processed counter (reference page_count), NOT the URL's
-            # page= param — F7 counts pages fetched this run from 0
-            .withColumn("page_index", F.lit(0))
-            .withColumn("pos_on_page", F.lit(0))
-            .withColumn("attempt", F.lit(0))
-            .withColumn("not_before", F.lit(0).cast("long"))
-            .withColumn("discovery_rank", F.lit(None).cast("long"))
-            .withColumn("discovered_wave", F.lit(-1))
-            .withColumn("priority_price", F.lit(None).cast("int"))
-            .withColumn("priority_freshness", F.lit(None).cast("long"))
-            .select(*FRONTIER_COLS)
-        )
-        fr = robots_gate(fr, self.robots)
-        seen = fr.select("url_hash", "url_norm", "host", "kind",
-                         "discovery_rank", "discovered_wave")
-        tag = {"wave": -1}
-        self.t["frontier"].write(log_adds(fr, -1, FRONTIER_COLS),
-                                 mode="overwrite", tag=tag, num_files=1)
-        self.t["seen_urls"].write(seen, mode="overwrite", tag=tag, num_files=1)
-        filters = self._build_filters(seen, None, wave=-1)
-        # sharded seed write: one immutable file per shard, so later waves
-        # can commit touched shards only (merge_shards)
-        self.t["seen_filters"].write_sharded(filters, mode="overwrite",
-                                             tag=tag)
-        for name, schema in (("pending_cars", PENDING_LOG_SCHEMA),
-                             ("cars", CARS_SCHEMA),
-                             ("car_images", CAR_IMAGES_SCHEMA),
-                             ("metrics", METRICS_SCHEMA),
-                             ("host_state", HOSTSTATE_SCHEMA),
-                             ("saved_hashes", SAVED_HASHES_SCHEMA)):
-            self.t[name].write(empty_df(self.spark, schema),
-                               mode="overwrite", tag=tag, num_files=1)
-        self._log_rows = None  # fresh logs: re-size from footers
+        # page_index is the pages-processed counter (reference page_count),
+        # NOT the URL's page= param — F7 counts pages fetched this run from 0
+        fr = seed_df.select(*frontier_row(
+            "kind", url_norm=U.canonicalize_url(F.col("url")),
+            discovered_wave=-1))
+        self._seed(robots_gate(fr, self.robots), 1, None)
 
     def start_from_df(self, seed_urls: DataFrame, kind: str = "car") -> None:
         """Bulk-seed the frontier from a DataFrame of URLs (sitemap-style
@@ -637,49 +604,40 @@ class CrawlEngine:
         ``seed_urls`` needs a ``url`` column; ranks are assigned per host in
         URL order (a bulk seed has no listing-derived crawl order).
         """
-        cfg = self.cfg
-        fr = (
-            seed_urls.select(U.canonicalize_url(F.col("url")).alias("url_norm"))
-            .withColumn("url_hash", U.url_hash64(F.col("url_norm")))
-            .withColumn("host", U.url_host(F.col("url_norm")))
-            .withColumn("kind", F.lit(kind))
-            .withColumn("kind_rank", U.kind_rank(F.lit(kind)))
-            .withColumn("page_index", F.lit(0))
-            .withColumn("pos_on_page", F.lit(0))
-            .withColumn("attempt", F.lit(0))
-            .withColumn("not_before", F.lit(0).cast("long"))
-            .withColumn(
-                "discovery_rank",
-                F.row_number().over(
-                    Window.partitionBy("host").orderBy("url_norm"))
-                .cast("long"))
-            .withColumn("discovered_wave", F.lit(-1))
-            .withColumn("priority_price", F.lit(None).cast("int"))
-            .withColumn("priority_freshness", F.lit(None).cast("long"))
-            .select(*FRONTIER_COLS)
-        )
-        fr = robots_gate(fr, self.robots)
-        seen = fr.select("url_hash", "url_norm", "host", "kind",
-                         "discovery_rank", "discovered_wave")
-        tag = {"wave": -1}
-        nf = max(2, cfg.shuffle_partitions // 2)
-        self.t["frontier"].write(log_adds(fr, -1, FRONTIER_COLS),
-                                 mode="overwrite", tag=tag, num_files=nf)
-        self.t["seen_urls"].write(seen, mode="overwrite", tag=tag, num_files=nf)
-        filters = self._build_filters(seen, None, wave=-1)
-        self.t["seen_filters"].write_sharded(filters, mode="overwrite",
-                                             tag=tag)
+        urls = (seed_urls
+                .select(U.canonicalize_url(F.col("url")).alias("url_norm"))
+                .withColumn("host", U.url_host(F.col("url_norm"))))
+        fr = robots_gate(urls.select(*frontier_row(
+            "url_norm", "host", kind=kind,
+            discovery_rank=F.row_number().over(
+                Window.partitionBy("host").orderBy("url_norm")).cast("long"),
+            discovered_wave=-1)), self.robots)
         hs = fr.groupBy("host").agg(
             F.max("discovery_rank").alias("cars_discovered"),
             F.lit(True).alias("pagination_done"))
-        self.t["host_state"].write(hs, mode="overwrite", tag=tag, num_files=2)
-        for name, schema in (("pending_cars", PENDING_LOG_SCHEMA),
-                             ("cars", CARS_SCHEMA),
-                             ("car_images", CAR_IMAGES_SCHEMA),
-                             ("metrics", METRICS_SCHEMA),
-                             ("saved_hashes", SAVED_HASHES_SCHEMA)):
-            self.t[name].write(empty_df(self.spark, schema),
-                               mode="overwrite", tag=tag, num_files=1)
+        self._seed(fr, max(2, self.cfg.shuffle_partitions // 2), hs)
+
+    def _seed(self, fr: DataFrame, num_files: int,
+              host_state: DataFrame | None) -> None:
+        """Commit the wave -1 checkpoint: frontier ``fr``, its seen rows
+        and filter (``num_files`` parquet files each), ``host_state``
+        (None = empty) and every other table empty."""
+        tag = {"wave": -1}
+        seen = fr.select(*SEEN_COLS)
+        self.t["frontier"].write(log_adds(fr, -1, FRONTIER_COLS),
+                                 "overwrite", tag, num_files)
+        self.t["seen_urls"].write(seen, "overwrite", tag, num_files)
+        # sharded seed write: one immutable file per shard, so later waves
+        # can commit touched shards only (merge_shards)
+        self.t["seen_filters"].write_sharded(
+            self._build_filters(seen, None, wave=-1), "overwrite", tag)
+        for name in STATE_TABLES:
+            if name in ("frontier", "seen_urls", "seen_filters"):
+                continue
+            df = empty_df(self.spark, stored_schema(name))
+            if name == "host_state" and host_state is not None:
+                df = host_state
+            self.t[name].write(df, "overwrite", tag, 1)
         self._log_rows = None  # fresh logs: re-size from footers
 
     # ------------------------------------------------------------------ wave
@@ -704,6 +662,15 @@ class CrawlEngine:
         single-worker thread (:meth:`_warm`) that lives for this call
         only: it is shut down on every exit, including a raising stage.
 
+        State flows per table, keyed by the table name: ``state`` (else
+        the tables read back from disk) supplies the six pass-through
+        tables; the wave plans one write per table (``wt_<table>`` in
+        ``detail`` times it); frontier/pending_cars choose between a
+        delta append and a compaction rewrite; one loop over all nine
+        tables then submits each write, or retags a table the wave added
+        nothing to; and the next wave's state is the new frame per
+        pass-through table (the old one where the table was retagged).
+
         Contract for standalone callers (tests / custom drivers): the
         per-wave filter and frontier/pending write-volume accounting
         accumulates in memory (``_filter_log`` / ``_state_meta``) and is
@@ -725,7 +692,7 @@ class CrawlEngine:
                   defer_commits: bool) -> WaveStats:
         import time as _time
         from concurrent.futures import ThreadPoolExecutor
-        cfg, spark = self.cfg, self.spark
+        cfg = self.cfg
         ts = cfg.wave_ts(wave)
         st = WaveStats(wave=wave)
         _t = {"start": _time.time()}
@@ -735,24 +702,12 @@ class CrawlEngine:
             _t[name] = round(now - _t.pop("_last", _t["start"]), 3)
             _t["_last"] = now
 
-        if state is not None:
-            # pass-through state from the previous wave: localCheckpointed
-            # in-memory frames identical row-for-row to what the async
-            # commits are writing — the wave never waits on parquet
-            frontier = state["frontier"]
-            seen = state["seen_urls"]
-            filters = state["seen_filters"]
-            pending = state["pending_cars"]
-            saved_hashes = state["saved_hashes"]
-            host_state = state["host_state"]
-        else:
-            frontier = self._frontier_read()
-            seen = self._read("seen_urls", SEEN_SCHEMA)
-            filters = self.t["seen_filters"].read(
-                spark, schema=self._filter_schema())
-            pending = self._pending_read()
-            saved_hashes = self._read("saved_hashes", SAVED_HASHES_SCHEMA)
-            host_state = self._read("host_state", HOSTSTATE_SCHEMA)
+        # pass-through state from the previous wave: localCheckpointed
+        # in-memory frames identical row-for-row to what the async commits
+        # are writing — the wave never waits on parquet
+        state = state or self._read_state()
+        frontier, seen, filters = (state["frontier"], state["seen_urls"],
+                                   state["seen_filters"])
         self._init_log_rows()
 
         _mark("read_state")
@@ -764,18 +719,19 @@ class CrawlEngine:
                 f = http_fetched_frontier(
                     sel, endpoint=cfg.http_endpoint,
                     timeout_s=cfg.http_timeout_s, workers=cfg.http_workers,
-                    cand_cols=FRONTIER_COLS, cand_schema=E["fetch_schema"])
+                    cand_cols=FRONTIER_COLS, cand_schema=FRONTIER_SCHEMA)
             else:
                 f = fetched_frontier(sel, None, page_side=E["page_side"],
                                      cand_cols=FRONTIER_COLS,
-                                     cand_schema=E["fetch_schema"])
+                                     cand_schema=FRONTIER_SCHEMA)
             if cfg.payload_format == "html":
                 # P1: real-HTML pages -> structured payload via the
                 # selector-cascade mapInPandas stage; every downstream
                 # expression is unchanged
                 from auto_ria_spark.functions import html_extract
                 f = html_extract.payloads_from_html(
-                    f, E["fetched_cols"], E["fetched_schema_full"])
+                    f, FETCHED_COLS,
+                    f"{FRONTIER_SCHEMA}, {FETCH_RESULT_EXTRA}")
             return self._stage_share(f.withColumn("__pid", E["pid"]))
 
         eligible = frontier.filter(F.col("not_before") <= F.lit(ts))
@@ -803,7 +759,7 @@ class CrawlEngine:
         (new_links, next_pages, seen_only, host_state_next,
          flagged) = self._discover(
             lf.filter(E["status_ok"]), seen, filters,
-            saved_hashes, host_state, wave)
+            state["saved_hashes"], state["host_state"], wave)
         _mark("plan_L")
 
         # -- stage C: car fetch + field extraction ----------------------------
@@ -832,7 +788,7 @@ class CrawlEngine:
         ph_sel = top_b_per_host(ph_cand, cfg.phone_budget, ["discovery_rank"],
                                 salt_n=salt_n)
         pf = _fetch(ph_sel)
-        pending_all = pending.unionByName(new_pending)
+        pending_all = state["pending_cars"].unionByName(new_pending)
         saved_rows, resolved_hashes = self._resolve_phones(
             pf.filter(E["status_ok"]), pending_all)
         saved_rows = self._stage_share(saved_rows)
@@ -844,10 +800,8 @@ class CrawlEngine:
         failed = fetched.filter(E["s404"])
         requeue = (
             retryable.filter(E["can_retry"])
-            .select(*E["requeue_pre"],
-                    (F.lit(ts) + E["backoff"]).alias("not_before"),
-                    "discovery_rank", "discovered_wave",
-                    "priority_price", "priority_freshness")
+            .withColumn("not_before", F.lit(ts) + E["backoff"])
+            .select(*E["requeue_row"])
         )
         exhausted = retryable.filter(~E["can_retry"])
         # pending rows whose phone fetch died entirely — F4 no-phone drop
@@ -857,14 +811,8 @@ class CrawlEngine:
             .select(F.col("url_hash").alias("phone_hash"))
         )
 
-        # deferred write queue: writes are PLANNED as their inputs appear but
-        # only fire (in a thread fan-out) after the single stats job has
-        # materialized every stage cache — concurrent jobs during the
-        # planning phase were measured to contend with the driver's py4j
-        # traffic and slow the wave down.
         tag = {"wave": wave}
         nf = max(2, cfg.shuffle_partitions // 8)
-        write_queue: list[tuple] = []
 
         # -- next state ---------------------------------------------------------
         # next-state plan construction fans out over FIVE driver threads:
@@ -892,7 +840,7 @@ class CrawlEngine:
             # pass-through union — checkpoint so it computes once
             sa = self._warm(
                 new_links.unionByName(next_pages).unionByName(phone_rows)
-                .select(*E["seen_add_select"])
+                .select(*SEEN_COLS)
                 .unionByName(seen_only)
                 .localCheckpoint(eager=False))
             fx = self._warm(
@@ -913,7 +861,8 @@ class CrawlEngine:
             hs = self._warm(host_state_next.localCheckpoint(eager=False))
             shr = saved_rows.select(E["saved_hash_col"])
             shu = (self._warm(
-                saved_hashes.unionByName(shr).localCheckpoint(eager=False))
+                state["saved_hashes"].unionByName(shr)
+                .localCheckpoint(eager=False))
                 if defer_commits else None)
             return hs, shr, shu
 
@@ -973,7 +922,7 @@ class CrawlEngine:
                 # delta write serializes cached stubs with zero exchanges
                 new_this_wave
                 .join(F.broadcast(fetched_hashes), "url_hash", "left_anti")
-                .unionByName(requeue.select(*FRONTIER_COLS)),
+                .unionByName(requeue),
                 wave, FRONTIER_COLS)
             .unionByName(
                 # tombstone EVERY fetched key, no anti-join: a tombstone
@@ -992,7 +941,6 @@ class CrawlEngine:
             .unionByName(
                 log_dels(pending_dels, wave, PENDING_SCHEMA, "phone_hash"))
         )
-        write_queue.append(("seen", "seen_urls", seen_add, "append", nf))
         # TOUCHED-shard-only filter commit: the pass-through state keeps
         # the full merged filter frame, but the durable write re-serializes
         # only shards that gained URLs this wave — untouched shards'
@@ -1005,22 +953,31 @@ class CrawlEngine:
             .alias("shard")).distinct()
         filters_touched = filters_next.join(
             F.broadcast(touched_shards), "shard", "left_semi")
-        write_queue.append(("filters", "seen_filters", filters_touched,
-                            "merge_shards", None))
-        write_queue.append(("hoststate", "host_state", host_state_next,
-                            "overwrite", 1))
-        write_queue.append(("cars", "cars", saved_rows, "append", nf))
-        write_queue.append(("savedh", "saved_hashes", saved_hash_rows,
-                            "append", 1))
-        write_queue.append(("imgs", "car_images", imgs_next, "append", nf))
-
-        # pass-through union states for the next wave (appended tables):
-        # a checkpoint stub per wave keeps lineage depth constant — but
-        # ONLY if each stub is actually materialized within its wave, so
-        # both are counted in the single stats job below (an
+        # the wave's commits per table: (frame, mode, num_files).  Writes
+        # are PLANNED as their inputs appear but only fire (in a thread
+        # fan-out) after the single stats job has materialized every stage
+        # cache — concurrent jobs during the planning phase were measured
+        # to contend with the driver's py4j traffic and slow the wave down
+        writes = {
+            "seen_urls": (seen_add, "append", nf),
+            "seen_filters": (filters_touched, "merge_shards", None),
+            "host_state": (host_state_next, "overwrite", 1),
+            "cars": (saved_rows, "append", nf),
+            "saved_hashes": (saved_hash_rows, "append", 1),
+            "car_images": (imgs_next, "append", nf),
+        }
+        # the next wave's pass-through frames.  The appended tables' union
+        # stubs (None unless defer_commits) keep lineage depth constant —
+        # but ONLY if each stub is actually materialized within its wave,
+        # so both are counted in the single stats job below (an
         # unmaterialized lazy checkpoint still carries its full RDD DAG,
         # and chains of them across drain waves were measured to blow the
         # tail waves up ~40x).
+        next_frames = {
+            "frontier": frontier_next, "seen_urls": seen_next_u,
+            "seen_filters": filters_next, "pending_cars": pending_next,
+            "saved_hashes": savedh_next_u, "host_state": host_state_next,
+        }
 
         _mark("plan_state")
         # -- ONE combined stats action ------------------------------------------
@@ -1091,8 +1048,7 @@ class CrawlEngine:
         summary = self.spark.range(1).selectExpr(
             f"cast({wave} as int) as wave", "cast(-1 as int) as partition_id",
             f"inline(array({structs}))")
-        write_queue.append(("metrics", "metrics",
-                            metric_rows.unionByName(summary), "append", 1))
+        writes["metrics"] = (metric_rows.unionByName(summary), "append", 1)
 
         # -- commit fan-out (tagged with the wave: the checkpoint) ---------------
         # tables a sparse/drain wave adds nothing to get a tag-only commit
@@ -1100,11 +1056,11 @@ class CrawlEngine:
         # advancing) instead of an empty Spark write job
         skip = set()
         if st.saved == 0:
-            skip |= {"cars", "savedh", "imgs"}
+            skip |= {"cars", "saved_hashes", "car_images"}
         if (row["sa_n"] or 0) == 0:
-            skip |= {"seen", "filters"}
+            skip |= {"seen_urls", "seen_filters"}
         if st.discovered == 0:
-            skip.add("hoststate")
+            skip.add("host_state")
 
         # frontier/pending delta commit vs compaction: append the wave's
         # delta while the persisted log stays within compact_factor of the
@@ -1119,31 +1075,22 @@ class CrawlEngine:
         # only compacts a little early.  bound == 0 ⟺ empty delta (drain
         # wave) ⟹ tag-only commit.
         self._drain_writes()
-        for name, table, delta, full, bound, live, cols in (
-                ("frontier", "frontier", frontier_delta, frontier_next,
+        for name, delta, bound, live in (
+                ("frontier", frontier_delta,
                  (row["sa_n"] or 0) + st.requeued + st.selected,
-                 st.frontier_left, FRONTIER_COLS),
-                ("pending", "pending_cars", pending_delta, pending_next,
-                 3 * st.selected, row["p_left"] or 0, PENDING_COLS)):
+                 st.frontier_left),
+                ("pending_cars", pending_delta, 3 * st.selected,
+                 row["p_left"] or 0)):
             if bound == 0:
-                # empty delta (drain wave) ⟹ tag-only commit: retag the
-                # table directly — queuing a write here would be dead code
-                # (skip converts queue entries to retags in the fan-out),
-                # and the name must still enter `skip` so the pass-through
-                # state below reuses the OLD materialized frame
-                skip.add(name)
-                self.t[table].retag(tag)
-            elif (self._log_rows[name] + bound
-                    > cfg.compact_factor * max(live, 1)):
-                write_queue.append((name, table,
-                                    log_adds(full, wave, cols),
-                                    "overwrite", nf))
-                self._state_meta[(wave, name)] = {
-                    "mode": 1, "live": live, "bound": bound}
-            else:
-                write_queue.append((name, table, delta, "append", nf))
-                self._state_meta[(wave, name)] = {
-                    "mode": 0, "live": live, "bound": bound}
+                skip.add(name)  # retag; the old frame passes on
+                continue
+            compact = (self._log_rows[name] + bound
+                       > cfg.compact_factor * max(live, 1))
+            writes[name] = (
+                (log_adds(next_frames[name], wave, _LOGS[name][1]),
+                 "overwrite", nf) if compact else (delta, "append", nf))
+            self._state_meta[(wave, name)] = {
+                "mode": int(compact), "live": live, "bound": bound}
 
         # pass-through state: on a skip (drain) wave the new frame is
         # content-identical to the old one — pass the OLD (already
@@ -1152,27 +1099,16 @@ class CrawlEngine:
         # stats-stripped (see _strip_stats) to keep Catalyst's size
         # statistics constant-size across waves
         self._next_state = None if not defer_commits else {
-            "frontier": (frontier if "frontier" in skip
-                         else _strip_stats(frontier_next)),
-            "seen_urls": (seen if "seen" in skip
-                          else _strip_stats(seen_next_u)),
-            "seen_filters": (filters if "filters" in skip
-                             else _strip_stats(filters_next)),
-            "pending_cars": (pending if "pending" in skip
-                             else _strip_stats(pending_next)),
-            "saved_hashes": (saved_hashes if "savedh" in skip
-                             else _strip_stats(savedh_next_u)),
-            "host_state": (host_state if "hoststate" in skip
-                           else _strip_stats(host_state_next)),
-        }
+            name: state[name] if name in skip else _strip_stats(frame)
+            for name, frame in next_frames.items()}
 
-        def _timed(name, table, df, mode, nfi):
+        def _timed(name, df, mode, nfi):
             t0 = _time.time()
             if mode == "merge_shards":
-                snap = self.t[table].write_sharded(df, mode, tag)
+                snap = self.t[name].write_sharded(df, mode, tag)
                 # judged evidence: the per-wave filter WRITE volume must
                 # be touched-shards only — recorded into the metrics
-                # table at run() end (the write completes after this
+                # table by finalize() (the write completes after this
                 # wave's metrics commit has already fired, so the log —
                 # not the wave's detail dict — is the durable record)
                 self._filter_log.append(
@@ -1180,12 +1116,12 @@ class CrawlEngine:
                      snap.get("files_reused", 0),
                      snap.get("bytes_new", 0), snap.get("bytes_reused", 0)))
             else:
-                snap = self.t[table].write(df, mode, tag, nfi)
+                snap = self.t[name].write(df, mode, tag, nfi)
                 meta = self._state_meta.get((wave, name))
                 if meta is not None:
                     # judged evidence: per-wave frontier/pending WRITE
                     # volume must be O(delta) — rows/bytes actually
-                    # serialized land in the metrics table at run() end.
+                    # serialized land in the metrics table via finalize().
                     # The footer row count is also the EXACT log-size
                     # accounting the next wave's append-vs-compact
                     # decision reads (safe: that decision runs after
@@ -1204,11 +1140,12 @@ class CrawlEngine:
         # landed at the _drain_writes before the delta-commit decision
         if self._write_ex is None:
             self._write_ex = ThreadPoolExecutor(max_workers=8)
-        for args in write_queue:
-            if args[0] in skip:
-                self.t[args[1]].retag(tag)
+        for name in STATE_TABLES:
+            if name in skip:
+                self.t[name].retag(tag)
             else:
-                self._write_futs.append(self._write_ex.submit(_timed, *args))
+                self._write_futs.append(
+                    self._write_ex.submit(_timed, name, *writes[name]))
         if not defer_commits:
             # standalone callers read the tables right after the wave
             self._drain_writes()
@@ -1230,17 +1167,11 @@ class CrawlEngine:
         """
         if getattr(self, "_E", None) is not None:
             return self._E
-        from auto_ria_spark.sources.fetch import (FETCH_RESULT_EXTRA,
-                                                  page_store_side)
         cfg = self.cfg
         body = F.col("body")
         E: dict = {}
         E["page_side"] = (page_store_side(self.pages)
                           if self.pages is not None else None)
-        E["fetch_schema"] = FRONTIER_SCHEMA
-        E["fetched_schema_full"] = FRONTIER_SCHEMA + ", " + FETCH_RESULT_EXTRA
-        E["fetched_cols"] = FRONTIER_COLS + [
-            "status_code", "body", "fetch_ua", "retry_after_s"]
         E["pid"] = F.spark_partition_id()
         # -- discover ---------------------------------------------------------
         E["links_select"] = [
@@ -1268,13 +1199,11 @@ class CrawlEngine:
             U.url_host(F.col("url_norm")).alias("host"),
             U.classify_kind(F.col("url_norm")).alias("link_kind"),
         ]
-        E["link_cols"] = ["page_index", "pos_on_page", "url_norm",
-                          "priority_price", "priority_freshness",
-                          "url_hash", "host", "link_kind"]
         E["link_schema"] = (
             "page_index int, pos_on_page int, url_norm string,"
             " priority_price int, priority_freshness long,"
             " url_hash long, host string, link_kind string")
+        E["link_cols"] = [n for n, _ in schema_fields(E["link_schema"])]
         # F1a as a min_by partial aggregate: the (page_index, pos_on_page,
         # page_url) order key is unique per url_hash (one page emits one
         # row per position), so the aggregate winner is exactly the old
@@ -1304,19 +1233,14 @@ class CrawlEngine:
             & (F.col("discovery_rank") > cfg.max_cars))
         E["cond_new"] = ~F.col("__in_db") & ~F.col("__over")
         E["cond_seen_only"] = F.col("__in_db") | F.col("__over")
-        E["new_links_static"] = [
-            "url_norm", "url_hash", "host",
-            F.lit("car").alias("kind"),
-            U.kind_rank(F.lit("car")).alias("kind_rank"),
-            "page_index", "pos_on_page",
-            F.lit(0).alias("attempt"),
-            F.lit(0).cast("long").alias("not_before"),
-            "discovery_rank", "priority_price", "priority_freshness",
-        ]
-        E["seen_only_static"] = [
-            "url_hash", "url_norm", "host", F.lit("car").alias("kind"),
-            "discovery_rank",
-        ]
+        # discovered links (and their seen rows) carry their
+        # discovered_wave from _discover's per-wave stamp
+        E["new_links_row"] = frontier_row(
+            "url_norm", "url_hash", "host", "page_index", "pos_on_page",
+            "discovery_rank", "discovered_wave", "priority_price",
+            "priority_freshness", kind="car")
+        E["seen_only_row"] = [F.lit("car").alias(c) if c == "kind" else c
+                              for c in SEEN_COLS]
         E["host_state_select"] = [
             "host",
             (F.coalesce(F.col("cars_discovered"), F.lit(0))
@@ -1341,32 +1265,13 @@ class CrawlEngine:
             F.col("host"),
             (F.col("page_index") + 1).alias("page_index"),
         ]
-        E["next_pages_static"] = [
-            "url_norm",
-            U.url_hash64(F.col("url_norm")).alias("url_hash"),
-            "host",
-            F.lit("listing").alias("kind"),
-            U.kind_rank(F.lit("listing")).alias("kind_rank"),
-            "page_index",
-            F.lit(0).alias("pos_on_page"),
-            F.lit(0).alias("attempt"),
-            F.lit(0).cast("long").alias("not_before"),
-            F.lit(None).cast("long").alias("discovery_rank"),
-            F.lit(None).cast("int").alias("priority_price"),
-            F.lit(None).cast("long").alias("priority_freshness"),
-        ]
-        E["sitemap_static"] = [
-            "url_norm", "url_hash", "host",
-            F.lit("listing").alias("kind"),
-            U.kind_rank(F.lit("listing")).alias("kind_rank"),
-            F.lit(0).alias("page_index"),   # each chain restarts page_count
-            "pos_on_page",
-            F.lit(0).alias("attempt"),
-            F.lit(0).cast("long").alias("not_before"),
-            F.lit(None).cast("long").alias("discovery_rank"),
-            F.lit(None).cast("int").alias("priority_price"),
-            F.lit(None).cast("long").alias("priority_freshness"),
-        ]
+        E["next_pages_row"] = frontier_row(
+            "url_norm", "host", "page_index", "discovered_wave",
+            kind="listing")
+        # page_index 0: each sitemap-discovered chain restarts page_count
+        E["sitemap_row"] = frontier_row(
+            "url_norm", "url_hash", "host", "pos_on_page", "discovered_wave",
+            kind="listing")
         # -- parse cars --------------------------------------------------------
         E["parsed_select"] = [
             "url_norm", "url_hash", "host", "discovery_rank",
@@ -1387,42 +1292,28 @@ class CrawlEngine:
         E["has_phone_url"] = F.col("phone_url").isNotNull()
         E["phone_norm"] = U.canonicalize_url(F.col("phone_url"))
         E["phone_hash"] = U.url_hash64(F.col("phone_norm"))
-        E["pending_select"] = [
-            "phone_hash", F.col("url_norm").alias("url"), "host",
-            "discovery_rank", "title", "price_usd", "odometer", "username",
-            "image_url", "image_id", "images_count", "car_number", "car_vin",
-        ]
-        E["phone_rows_static"] = [
-            F.col("phone_norm").alias("url_norm"),
-            F.col("phone_hash").alias("url_hash"),
-            "host",
-            F.lit("phone").alias("kind"),
-            U.kind_rank(F.lit("phone")).alias("kind_rank"),
-            F.lit(0).alias("page_index"),
-            F.lit(0).alias("pos_on_page"),
-            F.lit(0).alias("attempt"),
-            F.lit(0).cast("long").alias("not_before"),
-            "discovery_rank",
-            F.lit(None).cast("int").alias("priority_price"),
-            F.lit(None).cast("long").alias("priority_freshness"),
-        ]
+        E["pending_select"] = [F.col("url_norm").alias(c) if c == "url"
+                               else c for c in PENDING_COLS]
+        E["phone_rows_row"] = frontier_row(
+            "host", "discovery_rank", "discovered_wave",
+            url_norm=F.col("phone_norm"), url_hash=F.col("phone_hash"),
+            kind="phone")
         # -- resolve phones ------------------------------------------------------
         E["phones_select"] = [
             F.col("url_hash").alias("phone_hash"),
             X.phones_from_json(body).alias("phone_arr"),
         ]
         E["has_phones"] = F.size("phone_arr") > 0
-        E["assembled_select"] = [
-            "url", "title", "price_usd", "odometer", "username",
-            X.join_phones(
+        assembled = {
+            "phone_number": X.join_phones(
                 F.transform(F.col("phone_arr"),
                             lambda p: X.normalize_phone(p))
             ).alias("phone_number"),
-            "image_url", "image_id", "images_count", "car_number", "car_vin",
-            F.timestamp_seconds(F.lit(cfg.wave_ts_base))
+            "datetime_found": F.timestamp_seconds(F.lit(cfg.wave_ts_base))
             .alias("datetime_found"),
-            "host", "discovery_rank",
-        ]
+        }
+        E["assembled_select"] = [assembled.get(c, c) for c, _ in
+                                 schema_fields(CARS_SCHEMA)]
         E["resolved_select"] = [F.col("url_hash").alias("phone_hash")]
         # -- run_wave ------------------------------------------------------------
         E["kind_lst"] = F.col("kind").isin("listing", "sitemap")
@@ -1440,13 +1331,10 @@ class CrawlEngine:
             (F.lit(cfg.backoff_base_s) * (F.col("attempt") + 1))
             .cast("long"))
         E["can_retry"] = F.col("attempt") + 1 < F.lit(cfg.max_attempts)
-        E["requeue_pre"] = [
-            "url_norm", "url_hash", "host", "kind", "kind_rank",
-            "page_index", "pos_on_page",
-            (F.col("attempt") + 1).alias("attempt"),
-        ]
-        E["seen_add_select"] = ["url_hash", "url_norm", "host", "kind",
-                                "discovery_rank", "discovered_wave"]
+        # not_before is set per wave (the backoff is relative to it)
+        E["requeue_row"] = frontier_row(
+            *(c for c in FRONTIER_COLS if c != "attempt"),
+            attempt=F.col("attempt") + 1)
         E["f_agg"] = [
             F.count("*").alias("f_n"),
             F.sum(F.when(F.col("status_code") == 200, 1)
@@ -1530,7 +1418,8 @@ class CrawlEngine:
         certain_new = probed.filter(~E["maybe_seen"]).drop("maybe_seen")
         maybe = probed.filter(E["maybe_seen"]).drop("maybe_seen")
         new = certain_new.unionByName(
-            maybe.join(seen.select("url_hash"), "url_hash", "left_anti"))
+            maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
+        ).select("*", wave_lit)
         # sitemap-discovered listing chains start their own pagination
         new_listing_pages = new.filter(E["kind_listing_link"])
         new = new.filter(E["kind_car_link"]).drop("link_kind")
@@ -1558,9 +1447,9 @@ class CrawlEngine:
         )
 
         new_links = flagged.filter(E["cond_new"]).select(
-            *E["new_links_static"], wave_lit)
+            *E["new_links_row"])
         seen_only = flagged.filter(E["cond_seen_only"]).select(
-            *E["seen_only_static"], wave_lit)
+            *E["seen_only_row"])
 
         # host_state: bump the running discovery counters
         per_host_new = flagged.groupBy("host").agg(E["hs_new_agg"])
@@ -1579,11 +1468,10 @@ class CrawlEngine:
         np_gate = page_counts.join(after_counts, "host", "left") \
             .filter(E["np_gate_cond"])
         next_pages = (
-            np_gate.select(*E["next_pages_proj"])
-            .select(*E["next_pages_static"], wave_lit)
+            np_gate.select(*E["next_pages_proj"], wave_lit)
+            .select(*E["next_pages_row"])
         )
-        sitemap_listings = new_listing_pages.select(
-            *E["sitemap_static"], wave_lit)
+        sitemap_listings = new_listing_pages.select(*E["sitemap_row"])
         next_pages = (
             next_pages.unionByName(sitemap_listings)
             .dropDuplicates(["url_hash"])
@@ -1603,11 +1491,11 @@ class CrawlEngine:
             parsed.filter(E["not_deleted"])        # F3
             .filter(E["has_phone_url"])            # F4 (no handle)
             .withColumn("phone_norm", E["phone_norm"])
-            .withColumn("phone_hash", E["phone_hash"])
+            .withColumns({"phone_hash": E["phone_hash"],
+                          "discovered_wave": F.lit(wave)})
         )
         new_pending = with_phone.select(*E["pending_select"])
-        phone_rows = with_phone.select(
-            *E["phone_rows_static"], F.lit(wave).alias("discovered_wave"))
+        phone_rows = with_phone.select(*E["phone_rows_row"])
         return new_pending, phone_rows, parsed
 
     def _resolve_phones(self, phone_ok: DataFrame, pending: DataFrame):
@@ -1691,73 +1579,56 @@ class CrawlEngine:
             if self._write_ex is not None:
                 self._write_ex.shutdown(wait=True)
                 self._write_ex = None
-        self._flush_filter_metrics()
-        self._flush_state_metrics()
+        self._flush_metrics()
 
-    def _flush_filter_metrics(self) -> None:
-        """Append per-wave seen-filter WRITE volume to the metrics table:
-        files/bytes newly serialized vs byte-reused (the touched-shard
-        commit evidence — at 4096-shard production sizing the reused
-        column is what used to be rewritten every wave).  Flushed after
-        the run's durability barrier because the async filter commit
-        lands after its own wave's metrics commit."""
-        log, self._filter_log = self._filter_log, []
-        if not log:
-            return
-        rows = []
-        for wave, fn, fr, bn, br in log:
-            rows += [
-                (wave, -1, "filter", "files_written", int(fn)),
-                (wave, -1, "filter", "files_reused", int(fr)),
-                (wave, -1, "filter", "bytes_written", int(bn)),
-                (wave, -1, "filter", "bytes_reused", int(br)),
-            ]
-        self.t["metrics"].write(
-            local_df(self.spark, rows, METRICS_SCHEMA),
-            mode="append", tag={"wave": max(r[0] for r in log)},
-            num_files=1)
+    def _flush_metrics(self) -> None:
+        """Append the accumulated write-volume evidence to the metrics
+        table in ONE write, after the run's durability barrier (the async
+        commits land after their own wave's metrics commit):
 
-    def _flush_state_metrics(self) -> None:
-        """Append per-wave frontier/pending WRITE volume to the metrics
-        table: rows/bytes serialized, the wave's delta size, the live row
-        count and whether the wave compacted — the O(delta)-commit
-        evidence (at the 10^10-URL north rule the old full-overwrite
-        re-serialized the whole frontier every wave).  Flushed after the
-        run's durability barrier like the filter log."""
+        * per-wave seen-filter files/bytes newly serialized vs byte-reused
+          (the touched-shard commit evidence — at 4096-shard production
+          sizing the reused column is what used to be rewritten every
+          wave), kind ``filter``;
+        * per-wave frontier/pending rows/bytes serialized, the wave's
+          delta bound, the live row count and whether the wave compacted
+          (the O(delta)-commit evidence — at the 10^10-URL north rule the
+          old full overwrite re-serialized the whole frontier every
+          wave), kinds ``frontier`` / ``pending``."""
+        flog, self._filter_log = self._filter_log, []
         meta, self._state_meta = self._state_meta, {}
-        if not meta:
-            return
         rows = []
+        for wave, fn, fr, bn, br in flog:
+            rows += [(wave, -1, "filter", metric, int(v)) for metric, v in (
+                ("files_written", fn), ("files_reused", fr),
+                ("bytes_written", bn), ("bytes_reused", br))]
         for (wave, name), m in sorted(meta.items()):
-            kind = name  # 'frontier' | 'pending'
-            rows += [
-                (wave, -1, kind, "rows_written", int(m.get("rows_written",
-                                                           -1))),
-                (wave, -1, kind, "bytes_written", int(m.get("bytes_written",
-                                                            -1))),
-                (wave, -1, kind, "rows_delta_bound", int(m["bound"])),
-                (wave, -1, kind, "rows_live", int(m["live"])),
-                (wave, -1, kind, "compacted", int(m["mode"])),
-            ]
-        self.t["metrics"].write(
-            local_df(self.spark, rows, METRICS_SCHEMA),
-            mode="append", tag={"wave": max(w for w, _ in meta)},
-            num_files=1)
+            rows += [(wave, -1, _LOGS[name][2], metric, int(v))
+                     for metric, v in (
+                         ("rows_written", m.get("rows_written", -1)),
+                         ("bytes_written", m.get("bytes_written", -1)),
+                         ("rows_delta_bound", m["bound"]),
+                         ("rows_live", m["live"]),
+                         ("compacted", m["mode"]))]
+        if rows:
+            self.t["metrics"].write(
+                local_df(self.spark, rows, METRICS_SCHEMA), mode="append",
+                tag={"wave": max(r[0] for r in rows)}, num_files=1)
 
     # ------------------------------------------------------------------ views
     def cars_final(self) -> DataFrame:
         """The deduped cars view (J3/J4 global semantics: per VIN the lowest
         discovery rank wins; URL uniqueness is structural — F1/F2)."""
-        return _dedup_by_vin(self._read("cars", CARS_SCHEMA))
+        return _dedup_by_vin(self._read("cars"))
 
     def seen(self) -> DataFrame:
-        return self._read("seen_urls", SEEN_SCHEMA)
+        return self._read("seen_urls")
 
     def car_images(self) -> DataFrame:
         """Image verdicts for the FINAL cars (stage V runs per wave, before
         cross-wave VIN dedup settles — scope to the deduped view here)."""
-        return self._read("car_images", CAR_IMAGES_SCHEMA).join(
+        return self._read("car_images").join(
             self.cars_final().select("url"), "url", "left_semi")
 
     def metrics(self) -> DataFrame:
-        return self._read("metrics", METRICS_SCHEMA)
+        return self._read("metrics")

@@ -15,8 +15,10 @@ reproduces the three Iceberg properties the crawl engine actually relies on:
    retention, reference: app/utils/db_dumper.py:105-148).
 
 On a real cluster this module is replaced 1:1 by Iceberg; `iceberg_ddl()`
-emits the DDL. Data files are bucketed by a hash column chosen per table
-(frontier/seen: `url_hash`) so wave-over-wave joins co-partition.
+emits the DDL.  The crawl-state tables are declared once, in
+`STATE_TABLES` at the bottom: each table's schema and the hash column its
+data is bucketed by (frontier/seen: `url_hash`), so wave-over-wave joins
+co-partition.
 """
 
 from __future__ import annotations
@@ -27,6 +29,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from auto_ria_spark.operators import bloom
 
 _CURRENT = "CURRENT.json"
 
@@ -334,80 +338,85 @@ def cleanup_old_dumps(dest_dir: str, now_ts: int,
     return removed
 
 
-def iceberg_ddl() -> dict[str, str]:
-    """Production DDL: what these tables are on a real cluster.
+# ------------------------------------------------------------ declarations
+# Every crawl-state table, declared once: the schema of its live rows and
+# its production bucketing ``(column, buckets)`` (None = unbucketed).
+# Bucketing by url_hash makes every wave's frontier<->seen anti-join a
+# co-partitioned join on a real cluster.  The engine (plans/crawl.py)
+# derives its column lists and delta-log schemas from here and
+# ``iceberg_ddl()`` renders the DDL.
+STATE_TABLES: dict[str, tuple[str, tuple[str, int] | None]] = {
+    "frontier": (
+        "url_norm string, url_hash long, host string, kind string,"
+        " kind_rank int, page_index int, pos_on_page int, attempt int,"
+        " not_before long, discovery_rank long, discovered_wave int,"
+        " priority_price int, priority_freshness long",
+        ("url_hash", 4096)),
+    "seen_urls": (
+        "url_hash long, url_norm string, host string, kind string,"
+        " discovery_rank long, discovered_wave int",
+        ("url_hash", 4096)),
+    # the Bloom layout; the cuckoo filter stores ``table`` for ``bitset``
+    "seen_filters": (bloom.FILTER_SCHEMA, None),
+    "pending_cars": (
+        "phone_hash long, url string, host string, discovery_rank long,"
+        " title string, price_usd int, odometer int, username string,"
+        " image_url string, image_id string, images_count int,"
+        " car_number string, car_vin string",
+        ("phone_hash", 1024)),
+    # the reference's schema (reference: app/core/models.py:51-64); its
+    # unique-url / unique-vin constraints are enforced by MERGE
+    "cars": (
+        "url string, title string, price_usd int, odometer int,"
+        " username string, phone_number string, image_url string,"
+        " image_id string, images_count int, car_number string,"
+        " car_vin string, datetime_found timestamp, host string,"
+        " discovery_rank long",
+        ("url", 1024)),
+    "car_images": (
+        "image_id string, url string, w int, h int, decoded_w int,"
+        " decoded_h int, phash long, decoded_phash long, image_ok boolean,"
+        " caption string, verified_wave int",
+        ("image_id", 1024)),
+    # F2 incremental saved-set: hashes of every url in `cars`, appended per
+    # wave (never a per-wave rescan of cars); rebuilt from cars on resume
+    "saved_hashes": ("url_hash long", ("url_hash", 4096)),
+    "host_state": (
+        "host string, cars_discovered long, pagination_done boolean", None),
+    "metrics": (
+        "wave int, partition_id int, kind string, metric string, value long",
+        None),
+}
+# frontier/pending_cars are stored as DELTA LOGS (merge-on-read): per wave
+# the engine appends 'a' rows + 'd' tombstones stamped with the commit
+# wave and resolves at read (plans/crawl.resolve_log); on Iceberg v2 the
+# same model is expressible natively as equality-deletes on the key — the
+# explicit columns keep it engine-portable.
+DELTA_LOGS = ("frontier", "pending_cars")
+LOG_FIELDS = "__op string, __fwave int"
 
-    Bucketing by url_hash makes every wave's frontier<->seen anti-join a
-    co-partitioned join (no shuffle after the first wave); `cars` mirrors
-    the reference's schema (reference: app/core/models.py:51-64) with its
-    unique-url / unique-vin constraints enforced by MERGE.
-    """
-    return {
-        # frontier/pending_cars are DELTA LOGS (merge-on-read): per wave
-        # the engine appends 'a' rows + 'd' tombstones and resolves at
-        # read (plans/crawl.resolve_log); on Iceberg v2 the same model is
-        # expressible natively as equality-deletes on the key — the
-        # explicit __op/__fwave columns keep it engine-portable.
-        "frontier": (
-            "CREATE TABLE IF NOT EXISTS crawl.frontier ("
-            " url_norm string, url_hash bigint, host string, kind string,"
-            " kind_rank int, page_index int, pos_on_page int, attempt int,"
-            " not_before bigint, discovery_rank bigint,"
-            " discovered_wave int, priority_price int,"
-            " priority_freshness bigint, __op string, __fwave int)"
-            " USING iceberg PARTITIONED BY (bucket(4096, url_hash))"
-        ),
-        "seen_urls": (
-            "CREATE TABLE IF NOT EXISTS crawl.seen_urls ("
-            " url_hash bigint, url_norm string, host string, kind string,"
-            " discovery_rank bigint, discovered_wave int)"
-            " USING iceberg PARTITIONED BY (bucket(4096, url_hash))"
-        ),
-        "seen_filters": (
-            "CREATE TABLE IF NOT EXISTS crawl.seen_filters ("
-            " shard int, bitset binary, n_items bigint, updated_wave int)"
-            " USING iceberg"
-        ),
-        "pending_cars": (
-            "CREATE TABLE IF NOT EXISTS crawl.pending_cars ("
-            " phone_hash bigint, url string, host string,"
-            " discovery_rank bigint, title string, price_usd int,"
-            " odometer int, username string, image_url string,"
-            " image_id string, images_count int, car_number string,"
-            " car_vin string, __op string, __fwave int)"
-            " USING iceberg PARTITIONED BY (bucket(1024, phone_hash))"
-        ),
-        "cars": (
-            "CREATE TABLE IF NOT EXISTS crawl.cars ("
-            " url string, title string, price_usd int, odometer int,"
-            " username string, phone_number string, image_url string,"
-            " image_id string, images_count int, car_number string,"
-            " car_vin string, datetime_found timestamp, host string,"
-            " discovery_rank bigint)"
-            " USING iceberg PARTITIONED BY (bucket(1024, url))"
-        ),
-        "car_images": (
-            "CREATE TABLE IF NOT EXISTS crawl.car_images ("
-            " image_id string, url string, w int, h int, decoded_w int,"
-            " decoded_h int, phash bigint, decoded_phash bigint,"
-            " image_ok boolean, caption string, verified_wave int)"
-            " USING iceberg PARTITIONED BY (bucket(1024, image_id))"
-        ),
-        "saved_hashes": (
-            "CREATE TABLE IF NOT EXISTS crawl.saved_hashes ("
-            " url_hash bigint)"
-            " USING iceberg PARTITIONED BY (bucket(4096, url_hash))"
-        ),
-        "host_state": (
-            "CREATE TABLE IF NOT EXISTS crawl.host_state ("
-            " host string, cars_discovered bigint,"
-            " pagination_done boolean)"
-            " USING iceberg"
-        ),
-        "metrics": (
-            "CREATE TABLE IF NOT EXISTS crawl.metrics ("
-            " wave int, partition_id int, kind string, metric string,"
-            " value bigint)"
-            " USING iceberg"
-        ),
-    }
+
+def schema_fields(schema: str) -> list[tuple[str, str]]:
+    """``(name, type)`` pairs of a flat Spark DDL column list."""
+    return [tuple(part.strip().split(" ", 1)) for part in schema.split(",")]
+
+
+def stored_schema(name: str) -> str:
+    """The on-disk schema of state table ``name`` (delta logs carry the
+    log columns after the live ones)."""
+    schema = STATE_TABLES[name][0]
+    return f"{schema}, {LOG_FIELDS}" if name in DELTA_LOGS else schema
+
+
+def iceberg_ddl() -> dict[str, str]:
+    """Production DDL: what the state tables are on a real cluster,
+    rendered from ``STATE_TABLES`` (Spark ``long`` is Iceberg ``bigint``)."""
+    ddl = {}
+    for name, (_, bucket) in STATE_TABLES.items():
+        cols = ", ".join(f"{col} {'bigint' if typ == 'long' else typ}"
+                         for col, typ in schema_fields(stored_schema(name)))
+        part = (f" PARTITIONED BY (bucket({bucket[1]}, {bucket[0]}))"
+                if bucket else "")
+        ddl[name] = (f"CREATE TABLE IF NOT EXISTS crawl.{name} ( {cols})"
+                     f" USING iceberg{part}")
+    return ddl

@@ -14,6 +14,7 @@ from auto_ria_spark.config import CrawlConfig
 from auto_ria_spark.plans.crawl import CrawlEngine
 from auto_ria_spark.sources import worldgen
 from oracle import crawl_oracle
+from table_schemas import assert_declared_schemas
 
 CAR_FIELDS = ["url", "title", "price_usd", "odometer", "username",
               "phone_number", "image_url", "images_count", "car_number",
@@ -242,15 +243,19 @@ def _recrawl_roundtrip(spark, tmp_path, cfg, k=3, via_df=False):
     # the world is unchanged, so the refreshed state is identical
     assert _cars_by_url(eng) == before_cars
     assert _seen_identity(eng) == before_seen
+    return eng
 
 
 def test_recrawl_cuckoo_refetches_exactly_stale_set(spark, tmp_path):
     """Freshness re-queue on the cuckoo filter: stale phone fingerprints
     are DELETED in place (no rebuild), the stale cars re-fetch under their
     original ranks, and the final state matches the original crawl."""
-    _recrawl_roundtrip(
+    eng = _recrawl_roundtrip(
         spark, tmp_path,
         _cfg(seen_filter="cuckoo", cuckoo_buckets_per_shard=1 << 10))
+    # every table the crawl, the recrawl and the resumed run committed
+    # carries exactly its declared schema
+    assert_declared_schemas(eng)
 
 
 @pytest.mark.soak
@@ -420,3 +425,16 @@ def test_wave_failure_leaks_no_threads_and_resumes(spark, tmp_path,
     resumed = CrawlEngine(spark, str(tmp_path / "wh"), cfg, pages=pages)
     resumed.run(seeds=None, max_waves=400)
     assert_match(resumed, crawl_oracle(world, seeds, cfg))
+
+
+def test_failed_warm_count_warns(spark, tmp_path):
+    """A warm count that fails does not raise (the stage's consuming
+    action re-raises the error) but warns, naming the error."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), _cfg())
+    eng._warm_ex = ThreadPoolExecutor(max_workers=1)
+    bad = spark.range(1).filter("raise_error('boom') is null")
+    with pytest.warns(RuntimeWarning, match="boom"):
+        assert eng._warm(bad) is bad
+        eng._warm_ex.shutdown(wait=True)

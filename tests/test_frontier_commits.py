@@ -16,6 +16,7 @@ from auto_ria_spark.config import CrawlConfig
 from auto_ria_spark.plans.crawl import (FRONTIER_COLS, CrawlEngine,
                                         log_adds, log_dels, resolve_log)
 from auto_ria_spark.sources import worldgen
+from table_schemas import assert_declared_schemas
 
 
 def _saturated_engine(spark, tmp_path, name, **cfg_kw):
@@ -110,6 +111,9 @@ def test_compaction_triggers_and_preserves_resolution(spark, tmp_path):
     for v in m.values():
         assert v["rows_written"] == v["rows_live"]
     assert eng._frontier_read().count() == stats[-1].frontier_left
+    # the bulk seed, the delta appends and the compaction rewrites all
+    # commit exactly the declared schemas
+    assert_declared_schemas(eng)
 
 
 def test_host_state_bounded_by_host_count(spark, tmp_path):
